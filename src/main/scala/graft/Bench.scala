@@ -35,8 +35,9 @@ object BenchHarness {
         val dir = java.nio.file.Paths.get(
           sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
         if (java.nio.file.Files.isDirectory(dir))
-          java.nio.file.Files.walk(dir).filter(java.nio.file.Files.isRegularFile(_))
-            .mapToLong(java.nio.file.Files.size(_)).sum()
+          scala.util.Using.resource(java.nio.file.Files.walk(dir))(
+            _.filter(java.nio.file.Files.isRegularFile(_))
+              .mapToLong(java.nio.file.Files.size(_)).sum())
         else 0L
       } catch { case scala.util.control.NonFatal(_) => 0L }
     val sizeDerived = math.max(4L, sfBytes / (256L << 20)).toString

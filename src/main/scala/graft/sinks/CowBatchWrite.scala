@@ -38,7 +38,7 @@ import org.apache.spark.util.SerializableConfiguration
   * Spark's own `ExternalCatalogUtils.escapePathName`; the synthetic
   * transform columns exist only in directory names, never in file
   * content. Commit goes through the manifest machinery
-  * ([[CowTable.commitWrittenFiles]]): fresh C/R/B sidecar lines for the
+  * ([[CowTable.commitWritten]]): fresh C/R/B sidecar lines for the
   * written files, append-rebase or overwrite semantics, optimistic
   * retry — identical guarantees to the Scala-API write paths.
   */
@@ -78,17 +78,8 @@ class CowBatchWrite(spark: SparkSession, path: String, writeSchema: StructType,
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.toSeq.flatMap(_.asInstanceOf[CowCommitMessage].files)
-    mode match {
-      case CowWriteMode.Append =>
-        CowTable.commitWrittenFiles(spark, path, files, overwrite = false)
-      case CowWriteMode.Truncate =>
-        CowTable.commitWrittenFiles(spark, path, files, overwrite = true)
-      case CowWriteMode.Dynamic =>
-        CowTable.commitWrittenFilesDynamic(spark, path, files)
-      case CowWriteMode.Filtered(eqs) =>
-        CowTable.commitWrittenFilesFiltered(spark, path, files, eqs)
-    }
+    CowTable.commitWritten(spark, path,
+      messages.toSeq.flatMap(_.asInstanceOf[CowCommitMessage].files), mode)
     ()
   }
 

@@ -15,7 +15,9 @@ import org.apache.spark.sql.types
   * semantics and time travel are testable without external formats:
   *
   *  - `data/` holds immutable parquet files; `_snapshots/v{N}.json` is
-  *    a newline list of the files that constitute version N.
+  *    a newline list of the files that constitute version N, plus
+  *    sidecar, spec and per-file lines — the format [[Manifest]] parses,
+  *    renders and documents.
   *  - Readers list a SNAPSHOT, never the directory — a concurrent
   *    writer's half-written data file is invisible until its manifest
   *    commits.
@@ -206,11 +208,11 @@ object CowTable {
   private def listVersions(path: String): Seq[Int] = {
     val d = snapDir(path)
     if (!Files.exists(d)) return Seq.empty
-    Files.list(d).iterator().asScala
+    scala.util.Using.resource(Files.list(d))(_.iterator().asScala
       .map(_.getFileName.toString)
       .collect { case s if s.startsWith("v") && s.endsWith(".json") =>
         s.stripPrefix("v").stripSuffix(".json").toInt }
-      .toSeq.sorted
+      .toVector.sorted)
   }
 
   /** True once [[create]] has committed snapshot v1. */
@@ -223,158 +225,6 @@ object CowTable {
   def earliestVersion(path: String): Int =
     listVersions(path).headOption.getOrElse(0)
 
-  /** MERGE-ON-READ delete sidecars (round 10, generalized round 11): a
-    * manifest line starting with this prefix names a parquet file of
-    * DELETED KEYS (one or more key columns — the composite-key form
-    * landed round 11; every sidecar of a table carries the SAME column
-    * set) rather than a data file. A [[deleteMor]] commit adds one
-    * sidecar and carries every data file over by reference — zero
-    * data-file writes, the property that makes a daily GDPR delete
-    * affordable at 100 TB where the copy-on-write [[delete]] would
-    * rewrite every key-intersecting file. Readers apply the union of a
-    * snapshot's sidecars as an anti-join ON THE SIDECAR'S OWN COLUMN
-    * NAMES (never a caller-supplied key — ADVICE r10);
-    * [[compact]]/[[cluster]] fold them into the data (their rewrite
-    * reads the LOGICAL rows); [[merge]] un-deletes keys its batch
-    * reinserts. Old manifests contain no such lines, so pre-round-10
-    * tables read unchanged.
-    */
-  private val DeletePrefix = "D "
-
-  /** POSITIONAL delete sidecars (round 11, the Iceberg-v2 shape): a
-    * parquet file of (`__file`, `__lo`, `__hi`) rows — consecutive-run
-    * RANGES of 0-based row ordinals (`_metadata.row_index`) deleted
-    * from each data file. A wide predicate delete ([[deleteMorWhere]])
-    * commits a sidecar bounded by file-count × run-count, NOT by the
-    * deleted-row count — on a layout clustered by the predicate column
-    * a 10%-of-the-table delete collapses to a handful of ranges per
-    * touched file. Readers apply them per file (broadcast of the range
-    * list + an `exists` filter on the row index), never a table-wide
-    * anti-join.
-    */
-  private val PosDeletePrefix = "P "
-
-  /** SCHEMA-EVOLUTION spec (round 11): one line per manifest carrying
-    * the declared schema as `StructType.json`, with each field's
-    * rename lineage (prior physical names, newest first) in its
-    * metadata under `was`. Reads project every snapshot file through
-    * this schema — add/rename/drop/widen never rewrite data files.
-    * Manifests without the line read raw (pre-evolution behavior).
-    */
-  private val SchemaPrefix = "S "
-
-  /** PARTITION-TRANSFORM spec (round 11, hidden partitioning): one
-    * line carrying the table's current partition transforms (e.g.
-    * day(ts), bucket(16, id)) as metadata JSON. New data writes lay
-    * files out under `<transform>=<value>` directories; reads prune
-    * the FILE LIST from the path segments ([[readPrunedEq]]) without
-    * the query ever naming the transform column. Changing the spec is
-    * a metadata commit: old files keep their layout (they simply never
-    * prune), new writes use the new transform.
-    */
-  private val PartitionPrefix = "T "
-
-  /** TRANSACTION watermarks (round 11, the Delta `txn` appId/version
-    * shape): a line `X <appId> <version>` records the highest writer
-    * version an application has committed into this table. An
-    * [[append]] carrying `txn = (appId, v)` with `v <=` the recorded
-    * watermark is a NO-OP — which is exactly what makes a foreachBatch
-    * append sink effectively-once: a replayed micro-batch (restart
-    * between sink write and checkpoint commit) re-presents the same
-    * (appId, batchId) and commits nothing. One line per appId; every
-    * commit carries them forward ([[specLines]]).
-    */
-  private val TxnPrefix = "X "
-
-  /** COMMIT TIMESTAMP (round 15): one line per manifest carrying the
-    * commit wall-clock in epoch millis, clamped monotone against the
-    * base snapshot's stamp (a regressed clock can never reorder time
-    * travel against version order). `TIMESTAMP AS OF` resolves through
-    * [[versionAt]]; manifests that predate the line inherit the
-    * previous stamped time (0 before any stamp — an old table's
-    * history is "before every timestamp" rather than a guess).
-    */
-  private val WhenPrefix = "W "
-
-  /** PER-FILE COLUMN STATISTICS (round 12, the Iceberg/Delta file-stats
-    * contract): a line `C <dataFile>\t<json>` carrying, for each
-    * declared stats column, `[min, max, nonNullCount]` over that file's
-    * rows. Which columns get stats is itself a spec line
-    * (`K col1,col2`, [[setStatsColumns]]) carried forward by every
-    * commit; data-writing paths compute fresh `C` lines for the files
-    * they add, and [[commit]] mechanically carries/retires `C` lines
-    * with the data-file set — a rewrite drops the old file's stats with
-    * the file, a metadata commit carries both. Reads prune on any
-    * range/equality/IN predicate over a stated column
-    * ([[prunedFilesRange]]/[[prunedFilesIn]]): a file is SKIPPED only
-    * when its [min, max] provably excludes every matching row — a file
-    * without stats (written before the declaration, or a non-stats
-    * column) is always read. MoR-deleted rows leave stats
-    * over-approximate (wider bounds), never wrong.
-    */
-  private val StatsPrefix = "C "
-
-  /** The declared stats-column spec line: `K col1,col2` (see
-    * [[StatsPrefix]]); carried forward by [[specLines]].
-    */
-  private val StatsColsPrefix = "K "
-
-  /** PER-FILE ROW COUNT (round 16): a line `R <dataFile>\t<count>`,
-    * recorded by every data-writing path and carried/retired
-    * mechanically with the file set like `C`/`B` lines. This is what
-    * lets the catalog scan answer `COUNT(*)` from the manifest alone
-    * and report exact `numRows` estimates to the planner
-    * (SupportsReportStatistics / SupportsPushDownAggregates) — files
-    * written before the line existed simply have no entry, and every
-    * consumer falls back to scanning when ANY file lacks one.
-    */
-  private val RowsPrefix = "R "
-
-  /** PER-FILE KEY LOOKUP SIDECARS (round 13, VERDICT r12 task 2 — the
-    * Iceberg/Delta bloom-sidecar answer to point lookups): a line
-    * `B <dataFile>\t<json>` carrying, for each declared LOOKUP column,
-    * either the file's exact distinct-value dictionary (NDV ≤ the
-    * declared threshold) or a fixed-size bloom filter over the
-    * canonical key strings. Range `C` stats prune nothing for a
-    * high-cardinality equality/IN on a column the table is NOT
-    * clustered by — every file's [min,max] spans the key — which is
-    * exactly the shape of every keyed lookup at 100 TB (FK scans,
-    * band-index probes, IVF cell reads). Declared via
-    * [[setLookupColumns]] (`L` spec line); data-writing paths record
-    * fresh `B` lines; [[commit]] carries/retires them mechanically
-    * with the file set, like `C` lines. Consulted by
-    * [[prunedFilesIn]]: a file is skipped only when NO requested key
-    * can be present (dictionary miss, or all bloom probe bits clear) —
-    * files without an entry always survive; a value that cannot
-    * canonicalize under the column type never prunes.
-    */
-  private val BloomPrefix = "B "
-
-  /** The declared lookup-column spec: `L <dictMax> <bits> col1,col2`. */
-  private val LookupPrefix = "L "
-
-  /** WRITE-SIDE Z-ORDER spec (round 18, VERDICT r17 task 7):
-    * `ZO <bits> <col>:<mn>:<mx>,…` — the clustering columns and the
-    * FIXED normalization bounds every subsequent INSERT interleaves
-    * under. [[cluster]] normalizes with a per-rewrite data pass, which
-    * a streaming-in INSERT cannot do (each batch would normalize to
-    * its own bounds and the curves would not compose); storing the
-    * bounds once makes the z-value a PURE function of the row, so the
-    * V2 write face can expose it to `RequiresDistributionAndOrdering`
-    * through the function catalog. Out-of-bounds late data clamps to
-    * the curve's edge cell — pruning stays sound because file-skipping
-    * reads the real per-file `C` stats, never the spec.
-    */
-  private val ZOrderPrefix = "ZO "
-
-  private def isMetaLine(l: String): Boolean =
-    l.startsWith(DeletePrefix) || l.startsWith(PosDeletePrefix) ||
-      l.startsWith(SchemaPrefix) || l.startsWith(PartitionPrefix) ||
-      l.startsWith(TxnPrefix) || l.startsWith(StatsPrefix) ||
-      l.startsWith(StatsColsPrefix) || l.startsWith(BloomPrefix) ||
-      l.startsWith(LookupPrefix) || l.startsWith(WhenPrefix) ||
-      l.startsWith(RowsPrefix) || l.startsWith(ZOrderPrefix)
-
   /** Parsed view of ONE immutable snapshot manifest. The text parse
     * and the per-file JSON stat/sum parses are each done at most once
     * per cached entry — at 10⁵–10⁶ manifest entries (the 100 TB shape)
@@ -384,16 +234,9 @@ object CowTable {
     * fileSums, prunedFiles* … each of which re-read and re-parsed the
     * whole manifest.
     */
-  private final class SnapshotMeta(val lines: Seq[String]) {
-    lazy val dataFiles: Seq[String] = lines.filterNot(isMetaLine)
-    lazy val rowCounts: Map[String, Long] =
-      lines.filter(_.startsWith(RowsPrefix)).flatMap { l =>
-        val body = l.stripPrefix(RowsPrefix)
-        val i = body.indexOf('\t')
-        if (i < 0) None
-        else scala.util.Try(body.substring(0, i) -> body.substring(i + 1).trim.toLong)
-          .toOption
-      }.toMap
+  private final class SnapshotMeta(val manifest: Manifest) {
+    def dataFiles: Seq[String] = manifest.dataFiles
+    def rowCounts: Map[String, Long] = manifest.rowCounts
     lazy val stats: Map[String, Map[String, (org.json4s.JValue, org.json4s.JValue, Long)]] =
       parsedStatLines.view.mapValues(_.flatMap {
         case (c, org.json4s.JArray(mn :: mx :: nn :: _)) =>
@@ -510,12 +353,9 @@ object CowTable {
     }
     lazy val lookups: Map[String, Map[String, LookupEntry]] = {
       import org.json4s._
-      lines.filter(_.startsWith(BloomPrefix)).flatMap { l =>
-        val body = l.stripPrefix(BloomPrefix)
-        val i = body.indexOf('\t')
-        if (i < 0) None
-        else scala.util.Try {
-          val cols = org.json4s.jackson.JsonMethods.parse(body.substring(i + 1))
+      manifest.lookups.flatMap { case (f, json) =>
+        scala.util.Try {
+          val cols = org.json4s.jackson.JsonMethods.parse(json)
             .asInstanceOf[JObject].obj.flatMap {
               case (c, JObject(fields)) =>
                 val m = fields.toMap
@@ -531,21 +371,15 @@ object CowTable {
                 }
               case _ => None
             }.toMap
-          body.substring(0, i) -> cols
+          f -> cols
         }.toOption
-      }.toMap
+      }
     }
     private lazy val parsedStatLines: Map[String, List[(String, org.json4s.JValue)]] =
-      lines.filter(_.startsWith(StatsPrefix)).flatMap { l =>
-        val body = l.stripPrefix(StatsPrefix)
-        val i = body.indexOf('\t')
-        if (i < 0) None
-        else scala.util.Try {
-          body.substring(0, i) ->
-            org.json4s.jackson.JsonMethods.parse(body.substring(i + 1))
-              .asInstanceOf[org.json4s.JObject].obj
-        }.toOption
-      }.toMap
+      manifest.stats.flatMap { case (f, json) =>
+        scala.util.Try(f -> org.json4s.jackson.JsonMethods.parse(json)
+          .asInstanceOf[org.json4s.JObject].obj).toOption
+      }
   }
 
   /** (manifest file, size, mtime) → parsed snapshot, small LRU. A
@@ -574,15 +408,14 @@ object CowTable {
       case Some(m) => m
       case None =>
         val m = new SnapshotMeta(
-          new String(Files.readAllBytes(mf), StandardCharsets.UTF_8)
-            .split("\n").filter(_.nonEmpty).toSeq)
+          Manifest.parse(new String(Files.readAllBytes(mf), StandardCharsets.UTF_8)))
         metaCache.synchronized(metaCache.put(key, m))
         m
     }
   }
 
-  private def manifestLines(path: String, asOf: Option[Int]): Seq[String] =
-    snapshotMeta(path, asOf).lines
+  private def manifest(path: String, asOf: Option[Int]): Manifest =
+    snapshotMeta(path, asOf).manifest
 
   /** DATA files constituting `asOf` (default: latest snapshot) —
     * sidecar/spec lines excluded. Reads the requested manifest
@@ -594,8 +427,7 @@ object CowTable {
 
   /** The snapshot's merge-on-read key-delete sidecar files (often empty). */
   def snapshotDeletes(path: String, asOf: Option[Int] = None): Seq[String] =
-    manifestLines(path, asOf).filter(_.startsWith(DeletePrefix))
-      .map(_.stripPrefix(DeletePrefix))
+    manifest(path, asOf).keyDeletes
 
   /** Per-file footer row counts, memoized forever: a committed sidecar
     * parquet is content-immutable (written once under a fresh name,
@@ -635,51 +467,32 @@ object CowTable {
 
   /** The snapshot's positional-delete sidecar files (often empty). */
   def snapshotPositionDeletes(path: String, asOf: Option[Int] = None): Seq[String] =
-    manifestLines(path, asOf).filter(_.startsWith(PosDeletePrefix))
-      .map(_.stripPrefix(PosDeletePrefix))
+    manifest(path, asOf).posDeletes
 
   /** The snapshot's declared schema, if it has evolved ([[addColumn]] /
     * [[renameColumn]] / [[dropColumn]] / [[widenColumn]]). Field
     * metadata key `was` holds the column's prior physical names.
     */
   def declaredSchema(path: String, asOf: Option[Int] = None): Option[types.StructType] =
-    manifestLines(path, asOf).find(_.startsWith(SchemaPrefix))
-      .map(l => types.DataType.fromJson(l.stripPrefix(SchemaPrefix))
-        .asInstanceOf[types.StructType])
+    manifest(path, asOf).schema
 
   /** The snapshot's partition-transform spec ([[setPartitionSpec]]). */
   def partitionSpec(path: String, asOf: Option[Int] = None): Seq[PartitionTransform] =
-    manifestLines(path, asOf).find(_.startsWith(PartitionPrefix))
-      .map(l => PartitionTransform.decode(l.stripPrefix(PartitionPrefix)))
-      .getOrElse(Seq.empty)
+    manifest(path, asOf).partitionTransforms
 
   /** The semantics version of the snapshot's partition-spec line
     * ([[PartitionTransform.SpecV]] when no spec is declared — nothing
     * to distrust).
     */
   def partitionSpecVersion(path: String, asOf: Option[Int] = None): Long =
-    manifestLines(path, asOf).find(_.startsWith(PartitionPrefix))
-      .map(l => PartitionTransform.decodeVersion(l.stripPrefix(PartitionPrefix)))
-      .getOrElse(PartitionTransform.SpecV)
-
-  /** Spec lines (schema + partition + transaction watermarks) that
-    * every data/sidecar commit carries forward unchanged.
-    */
-  private def specLines(path: String, base: Int): Seq[String] =
-    manifestLines(path, Some(base)).filter(l =>
-      l.startsWith(SchemaPrefix) || l.startsWith(PartitionPrefix) ||
-        l.startsWith(TxnPrefix) || l.startsWith(StatsColsPrefix) ||
-        l.startsWith(LookupPrefix) || l.startsWith(ZOrderPrefix))
+    manifest(path, asOf).partitionSpecVersion
 
   /** The highest committed writer version for `appId` (−1 if this
     * application never committed) — the [[append]] `txn` watermark.
     */
   def txnVersion(path: String, appId: String,
                  asOf: Option[Int] = None): Long =
-    manifestLines(path, asOf).collect {
-      case l if l.startsWith(TxnPrefix + appId + " ") =>
-        l.stripPrefix(TxnPrefix + appId + " ").trim.toLong
-    }.foldLeft(-1L)(math.max)
+    manifest(path, asOf).txns.getOrElse(appId, -1L)
 
   /** Current version via the [[latestHint]] + forward probe — O(1) in
     * the commit count. Falls back to a directory listing only for
@@ -707,52 +520,32 @@ object CowTable {
     * an existing target). Readers still only ever see fully-written
     * manifests: content lands in the tmp file before the link exists.
     */
-  private def commit(path: String, files: Seq[String], base: Int): Int = {
+  private def commit(path: String, next: Manifest, base: Int): Int = {
     val d = snapDir(path)
     Files.createDirectories(d)
     val v = base + 1
-    // Per-file stats maintenance is MECHANICAL so no committer can get
-    // it wrong: carry the base snapshot's C lines for every data file
-    // still referenced (metadata commits, carried-over files), keep
-    // incoming C lines for fresh files (they win on a duplicate), and
-    // retire C lines whose file left the manifest (rewrites, compaction).
-    val dataSet = files.filterNot(isMetaLine).toSet
-    // carry/retire per-file sidecar lines (C stats, B lookup filters)
-    // mechanically with the data-file set: incoming lines win for
-    // fresh files, the base snapshot's carry for surviving files,
-    // departed files drop theirs
-    def carried(prefix: String): Seq[String] = {
-      val fromBase =
-        if (base > 0 && Files.exists(d.resolve(s"v$base.json")))
-          manifestLines(path, Some(base)).filter(_.startsWith(prefix))
-        else Seq.empty
-      val fileOf = (l: String) => l.stripPrefix(prefix).takeWhile(_ != '\t')
-      (files.filter(_.startsWith(prefix)) ++ fromBase)
-        .distinctBy(fileOf).filter(l => dataSet.contains(fileOf(l)))
-    }
-    // B lines exist only in service of an L spec: a committed line set
-    // with NO spec (setLookupColumns' retire path) must not have the
-    // base snapshot's B lines mechanically re-added, or cow_lookups
-    // reports retired sidecars forever (pruning stayed sound — the
-    // entries were accurate — but the retire was a no-op).
-    val hasLookupSpec = files.exists(_.startsWith(LookupPrefix))
+    // per-file entries retire MECHANICALLY so no committer can get it
+    // wrong: with their file (rewrites, compaction), and C/B with their
+    // spec (setStatsColumns / setLookupColumns retire paths)
+    val live = next.dataFiles.toSet
+    def ofLive[V](m: Map[String, V], declared: Boolean): Map[String, V] =
+      if (declared) m.filter(e => live.contains(e._1)) else Map.empty
     // commit timestamp, monotone vs the base (never carried — each
     // manifest stamps its own commit instant)
     val prevStamp =
       if (base > 0 && Files.exists(d.resolve(s"v$base.json")))
-        manifestLines(path, Some(base)).find(_.startsWith(WhenPrefix))
-          .map(_.stripPrefix(WhenPrefix).trim.toLong).getOrElse(0L)
+        manifest(path, Some(base)).commitMs.getOrElse(0L)
       else 0L
-    val stamp = math.max(System.currentTimeMillis(), prevStamp + 1)
-    val lines = files.filterNot(l =>
-      l.startsWith(StatsPrefix) || l.startsWith(BloomPrefix) ||
-        l.startsWith(WhenPrefix) || l.startsWith(RowsPrefix)) ++
-      carried(StatsPrefix) ++
-      carried(RowsPrefix) ++
-      (if (hasLookupSpec) carried(BloomPrefix) else Seq.empty) ++
-      Seq(WhenPrefix + stamp)
-    val tmp = d.resolve(s".v$v.${System.nanoTime()}.tmp")
-    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val m = next.copy(
+      stats = ofLive(next.stats, next.statsColumns.nonEmpty),
+      rowCounts = ofLive(next.rowCounts, declared = true),
+      lookups = ofLive(next.lookups, next.lookupSpec.nonEmpty),
+      commitMs = Some(math.max(System.currentTimeMillis(), prevStamp + 1)))
+    // a name unique per attempt: System.nanoTime() repeats across
+    // threads, and two writers sharing one tmp file publish or delete
+    // each other's manifest
+    val tmp = d.resolve(s".v$v.${java.util.UUID.randomUUID()}.tmp")
+    Files.write(tmp, m.render.getBytes(StandardCharsets.UTF_8))
     // publication goes through the pluggable lock seam: hard link on
     // POSIX/HDFS-class stores, external-lease + plain PUT on S3-class
     try commitLockProvider.publish(path, d.resolve(s"v$v.json"), tmp, v)
@@ -777,7 +570,7 @@ object CowTable {
     * original schema. Sidecar writes always pass an empty spec.
     */
   private def writeData(df: DataFrame, path: String,
-                        spec: Seq[PartitionTransform] = Seq.empty): Seq[String] = {
+                        spec: Seq[PartitionTransform] = Seq.empty): Vector[String] = {
     val stamp = s"${System.nanoTime()}"
     val dir = Paths.get(path, "data", stamp)
     if (spec.isEmpty) df.write.mode(SaveMode.ErrorIfExists).parquet(dir.toString)
@@ -785,23 +578,29 @@ object CowTable {
       d.withColumn(t.name, t.exprOf(col(t.src), df.schema(t.src).dataType)))
       .write.partitionBy(spec.map(_.name): _*)
       .mode(SaveMode.ErrorIfExists).parquet(dir.toString)
-    Files.walk(dir).iterator().asScala.map(_.toString)
-      .filter(f => f.endsWith(".parquet") && !f.contains("_SUCCESS")).toSeq
+    scala.util.Using.resource(Files.walk(dir))(_.iterator().asScala.map(_.toString)
+      .filter(f => f.endsWith(".parquet") && !f.contains("_SUCCESS")).toVector)
   }
 
-  /** [[writeData]] plus fresh `C` stats lines for the written files
-    * when the table declares stats columns ([[setStatsColumns]]) — the
-    * call every DATA-writing path uses; sidecar writes keep plain
-    * [[writeData]] (stats on delete-key/range files are meaningless).
+  /** [[writeData]] as a [[freshFiles]] fragment — the call every DATA-
+    * writing path uses; sidecar writes keep plain [[writeData]] (stats
+    * on delete-key/range files are meaningless).
     */
   private def writeDataWithStats(df: DataFrame, path: String,
-                                 spec: Seq[PartitionTransform] = Seq.empty): Seq[String] = {
-    val files = writeData(df, path, spec)
-    files ++ statsLinesFor(df.sparkSession, path, files, statsColumns(path)) ++
-      rowLinesFor(df.sparkSession, files) ++
-      lookupSpec(path).toSeq.flatMap(s =>
-        bloomLinesFor(df.sparkSession, path, files, s))
-  }
+                                 spec: Seq[PartitionTransform] = Seq.empty): Manifest =
+    freshFiles(df.sparkSession, path, writeData(df, path, spec))
+
+  /** Newly written data `files` as a manifest fragment for
+    * [[Manifest.withFiles]]: their `R` row counts, plus `C` stats and
+    * `B` lookup entries under the table's current declarations
+    * ([[setStatsColumns]] / [[setLookupColumns]]).
+    */
+  private def freshFiles(spark: SparkSession, path: String, files: Seq[String]): Manifest =
+    Manifest(dataFiles = files.toVector,
+      stats = statsFor(spark, path, files, statsColumns(path)),
+      rowCounts = rowCountsFor(spark, files),
+      lookups = lookupSpec(path).fold(Map.empty[String, String])(
+        lookupsFor(spark, path, files, _)))
 
   /** Create the table: data files + manifest v1. With `transforms`,
     * v1 is laid out under the hidden-partitioning spec and the spec is
@@ -810,11 +609,9 @@ object CowTable {
     */
   def create(df: DataFrame, path: String,
              transforms: Seq[PartitionTransform] = Seq.empty): Int = {
-    val spec =
-      if (transforms.isEmpty) Seq.empty
-      else Seq(PartitionPrefix + PartitionTransform.encode(transforms))
     val files = writeData(df, path, transforms)
-    commit(path, files ++ rowLinesFor(df.sparkSession, files) ++ spec,
+    commit(path, Manifest(dataFiles = files.toVector,
+        rowCounts = rowCountsFor(df.sparkSession, files)).withPartitionSpec(transforms),
       base = (listVersions(path) :+ 0).max)
   }
 
@@ -836,17 +633,11 @@ object CowTable {
     */
   private[sinks] def filesTuples(path: String, asOf: Option[Int])
       : Seq[(String, String, Long)] = {
-    val v = asOf.getOrElse(currentVersion(path))
-    manifestLines(path, Some(v)).flatMap { l =>
-      val (kind, f) =
-        if (l.startsWith(DeletePrefix)) ("delete_keys", l.stripPrefix(DeletePrefix))
-        else if (l.startsWith(PosDeletePrefix)) ("position_deletes", l.stripPrefix(PosDeletePrefix))
-        else if (isMetaLine(l)) (null, null)
-        else ("data", l)
-      Option(kind).map { k =>
-        val p = Paths.get(f)
-        (f, k, if (Files.exists(p)) Files.size(p) else -1L)
-      }
+    val m = manifest(path, asOf)
+    (m.dataFiles.map(_ -> "data") ++ m.keyDeletes.map(_ -> "delete_keys") ++
+      m.posDeletes.map(_ -> "position_deletes")).map { case (f, k) =>
+      val p = Paths.get(f)
+      (f, k, if (Files.exists(p)) Files.size(p) else -1L)
     }
   }
 
@@ -867,22 +658,18 @@ object CowTable {
     */
   private[sinks] def historyTuples(path: String)
       : Seq[(Long, Long, Long, Long, Boolean, Boolean, Long)] =
-    listVersions(path).sorted.map { v =>
-      val ls = manifestLines(path, Some(v))
-      (v.toLong, ls.count(l => !isMetaLine(l)).toLong,
-       ls.count(_.startsWith(DeletePrefix)).toLong,
-       ls.count(_.startsWith(PosDeletePrefix)).toLong,
-       ls.exists(_.startsWith(SchemaPrefix)),
-       ls.exists(_.startsWith(PartitionPrefix)),
-       commitTimeMs(path, v).getOrElse(0L))
+    listVersions(path).map { v =>
+      val m = manifest(path, Some(v))
+      (v.toLong, m.dataFiles.size.toLong, m.keyDeletes.size.toLong,
+       m.posDeletes.size.toLong, m.schemaJson.isDefined, m.partitionJson.isDefined,
+       m.commitMs.getOrElse(0L))
     }
 
   /** The commit wall-clock (epoch millis) stamped on `v`'s manifest;
     * None on manifests that predate the stamp line.
     */
   def commitTimeMs(path: String, v: Int): Option[Long] =
-    manifestLines(path, Some(v)).find(_.startsWith(WhenPrefix))
-      .map(_.stripPrefix(WhenPrefix).trim.toLong)
+    manifest(path, Some(v)).commitMs
 
   /** `TIMESTAMP AS OF` resolution: the snapshot a reader at wall-clock
     * `tsMillis` would have seen — the greatest version whose commit
@@ -913,8 +700,9 @@ object CowTable {
     * a data rewrite — which is what makes N concurrent ingest writers
     * affordable on a 100 TB table (an append conflicts with NOTHING:
     * it reads no existing file and replaces no existing line, the
-    * Iceberg fast-append). Contrast [[withCommitRetry]], which re-runs
-    * the whole operation for read-modify-write commits.
+    * Iceberg fast-append). Its retry ([[commitTxn]]) re-runs only that
+    * manifest step; read-modify-write commits re-run the whole
+    * operation under [[withCommitRetry]].
     *
     * Semantics under concurrency: appends serialize in commit order;
     * rows land with the layout of the partition spec read at WRITE
@@ -934,93 +722,81 @@ object CowTable {
   def append(spark: SparkSession, path: String, df: DataFrame,
              maxRetries: Int = 5,
              txn: Option[(String, Long)] = None): Int = {
-    txn.foreach { case (app, _) =>
-      require(!app.exists(_.isWhitespace), s"txn appId must not contain whitespace: '$app'")
-    }
     // Idempotence gate BEFORE paying the data write: a replayed
     // (appId, version) at or below the table's watermark already
     // committed fully — its files are in the manifest; re-appending
     // would duplicate rows.
-    def replayed: Boolean = txn.exists { case (app, v) =>
-      txnVersion(path, app) >= v
-    }
-    if (replayed) return currentVersion(path)
+    if (replayed(path, txn)) return currentVersion(path)
     val fresh = writeDataWithStats(df, path, partitionSpec(path))
-    var attempts = 0
-    while (true) {
-      val base = currentVersion(path)
-      if (replayed) return base // another writer of the SAME app won the race
-      val kept = txn.fold(manifestLines(path, Some(base))) { case (app, _) =>
-        manifestLines(path, Some(base))
-          .filterNot(_.startsWith(TxnPrefix + app + " "))
-      }
-      val mark = txn.map { case (app, v) => s"$TxnPrefix$app $v" }.toSeq
-      try return commit(path, kept ++ fresh ++ mark, base)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > maxRetries) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    commitTxn(path, txn, maxRetries)((_, m) => Some(m.withFiles(fresh)))
   }
 
-  /** Commit data files the V2 batch writer ([[graft.sinks.CowBatchWrite]])
-    * already wrote: fresh C/R/B sidecar lines are computed for them
-    * (same helpers as every Scala write path), then the manifest
-    * commits with [[append]]'s rebase semantics — losing a race costs
-    * a manifest recompute, never a data rewrite — or, for INSERT
-    * OVERWRITE, with [[overwrite]]'s replace-everything-carry-spec
-    * semantics under the optimistic retry. An empty append (zero rows
-    * wrote zero files) is a no-op, not an empty commit.
+  /** The `txn` replay gate: true when the table's watermark for the
+    * app (at `asOf`, default latest) is already at or past the version.
     */
-  private[graft] def commitWrittenFiles(spark: SparkSession, path: String,
-                                        files: Seq[String],
-                                        overwrite: Boolean,
-                                        txn: Option[(String, Long)] = None): Int = {
+  private def replayed(path: String, txn: Option[(String, Long)],
+                       asOf: Option[Int] = None): Boolean =
+    txn.exists { case (app, v) =>
+      require(!app.exists(_.isWhitespace), s"txn appId must not contain whitespace: '$app'")
+      txnVersion(path, app, asOf) >= v
+    }
+
+  /** The optimistic commit of the txn-aware writers ([[append]],
+    * [[commitWritten]], [[upsertMorPos]]) under [[withCommitRetry]]:
+    * each attempt re-reads the current snapshot, returns it unchanged
+    * when a same-app writer already committed `txn`, and otherwise
+    * commits `next(base, baseManifest)` (None = nothing to commit) with
+    * the app's watermark replaced by `txn`'s version.
+    */
+  private def commitTxn(path: String, txn: Option[(String, Long)], maxRetries: Int = 5)
+                       (next: (Int, Manifest) => Option[Manifest]): Int =
+    withCommitRetry(maxRetries) {
+      val base = currentVersion(path)
+      if (replayed(path, txn, Some(base))) base
+      else next(base, manifest(path, Some(base))).fold(base) { m =>
+        commit(path, txn.fold(m) { case (app, v) => m.copy(txns = m.txns.updated(app, v)) },
+          base)
+      }
+    }
+
+  /** Commit data files the V2 batch writer ([[graft.sinks.CowBatchWrite]])
+    * already wrote: fresh C/R/B entries are computed for them once
+    * (same helper as every Scala write path), then each optimistic
+    * attempt drops what `mode` replaces from the winner's snapshot
+    * ([[replacedBy]]) and adds the fresh files — losing a race costs a
+    * manifest recompute, never a data rewrite. An empty append (zero
+    * rows wrote zero files) is a no-op, not an empty commit; so is an
+    * empty dynamic overwrite (zero partitions replaced — Hive/Spark
+    * dynamic semantics, NOT a truncate).
+    */
+  private[graft] def commitWritten(spark: SparkSession, path: String,
+                                   files: Seq[String], mode: CowWriteMode,
+                                   txn: Option[(String, Long)] = None): Int = {
     // exactly-once for the STREAMING write face: a replayed epoch
     // (appId watermark already at/past this version) must not re-land
     // its rows — its files are orphans, reclaimed here immediately
     // (expireSnapshots would get them anyway)
-    def replayed: Boolean = txn.exists { case (app, v) =>
-      txnVersion(path, app) >= v
-    }
-    if (replayed) {
-      files.foreach(f => scala.util.Try(
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f))))
+    if (replayed(path, txn)) {
+      files.foreach(f => scala.util.Try(Files.deleteIfExists(Paths.get(f))))
       return currentVersion(path)
     }
-    if (files.isEmpty && !overwrite && txn.isEmpty) return currentVersion(path)
-    val mark = txn.map { case (app, v) => s"$TxnPrefix$app $v" }.toSeq
-    val fresh = files ++
-      statsLinesFor(spark, path, files, statsColumns(path)) ++
-      rowLinesFor(spark, files) ++
-      lookupSpec(path).toSeq.flatMap(s => bloomLinesFor(spark, path, files, s)) ++
-      mark
-    if (overwrite) withCommitRetry() {
-      val base = currentVersion(path)
-      val spec = specLines(path, base).filterNot(l =>
-        txn.exists { case (app, _) => l.startsWith(TxnPrefix + app + " ") })
-      commit(path, fresh ++ spec, base)
-    } else {
-      var attempts = 0
-      while (true) {
-        val base = currentVersion(path)
-        if (replayed) return base // a same-app racer won
-        val kept = txn.fold(manifestLines(path, Some(base))) { case (app, _) =>
-          manifestLines(path, Some(base))
-            .filterNot(_.startsWith(TxnPrefix + app + " "))
-        }
-        try return commit(path, kept ++ fresh, base)
-        catch {
-          case e: ConcurrentCommitException =>
-            attempts += 1
-            if (attempts > 5) throw e
-        }
-      }
-      throw new IllegalStateException("unreachable")
-    }
+    if (files.isEmpty && txn.isEmpty &&
+        (mode == CowWriteMode.Append || mode == CowWriteMode.Dynamic))
+      return currentVersion(path)
+    val fresh = freshFiles(spark, path, files)
+    commitTxn(path, txn)((_, m) =>
+      Some(replacedBy(spark, path, files, mode, m).withFiles(fresh)))
   }
+
+  /** [[commitWritten]] as INSERT INTO (append rebase) or, with
+    * `overwrite`, INSERT OVERWRITE of the whole table.
+    */
+  private[graft] def commitWrittenFiles(spark: SparkSession, path: String,
+                                        files: Seq[String],
+                                        overwrite: Boolean,
+                                        txn: Option[(String, Long)] = None): Int =
+    commitWritten(spark, path, files,
+      if (overwrite) CowWriteMode.Truncate else CowWriteMode.Append, txn)
 
   /** Per-spec partition-value tuple of a data file, parsed from its
     * `name=value` path segments — None when any current transform's
@@ -1038,66 +814,86 @@ object CowTable {
     if (vals.forall(_.isDefined)) Some(vals.map(_.get)) else None
   }
 
-  /** Shared guards for partition-replacing commits: replacing "a
-    * partition" is only sound when membership is decidable from file
-    * PATHS alone, so (a) key-delete sidecars must be folded first (a
-    * carried global key tombstone would hide same-keyed FRESH rows;
-    * dropping it would resurrect rows in untouched partitions), and
-    * (b) every live data file must carry the segments being matched
-    * (an old-layout file may contain replaced-partition rows — keeping
-    * it duplicates, dropping it loses other partitions' data).
+  /** The base manifest `m` minus what a V2 write in `mode` replaces:
+    *  - Append: nothing;
+    *  - Truncate (and Dynamic on an unpartitioned table): every data
+    *    file and delete sidecar, spec lines carried;
+    *  - Dynamic (`INSERT OVERWRITE` under partitionOverwriteMode=
+    *    dynamic): base data files whose partition-value tuple appears
+    *    among the FRESH files' tuples — the fresh files' directory
+    *    segments themselves declare what is replaced, no data pass;
+    *  - Filtered (`INSERT OVERWRITE … PARTITION (col=v, …)`): base data
+    *    files whose directory segment for EVERY filtered transform
+    *    equals the transform of the literal. The literal→segment
+    *    evaluation is [[prunedFilesEq]]'s own (cast to the source type,
+    *    same transform expression, same escaping), so the dropped set
+    *    is exactly the file set a read of that partition would serve.
+    * Partition replacement keeps positional sidecars (entries for
+    * dropped files go inert with their file); C/R/B entries retire
+    * with the dropped files in [[commit]].
     */
-  private def requireReplaceSafe(path: String, base: Int, op: String,
-                                 blind: Seq[String]): Unit = {
-    require(snapshotDeletes(path, Some(base)).isEmpty,
-      s"$op is ambiguous while merge-on-read key-delete sidecars are live " +
-        s"on $path — compact the table to fold them first")
-    require(blind.isEmpty,
-      s"$op needs every live data file under the current partition layout; " +
-        s"${blind.size} predate it (e.g. ${blind.take(3).mkString(", ")}) — " +
-        "rewrite first: CowTable.cluster/compact")
-  }
-
-  /** Commit V2-written files with DYNAMIC partition-overwrite semantics
-    * (`INSERT OVERWRITE` under partitionOverwriteMode=dynamic, via
-    * [[graft.sinks.CowBatchWrite]]): base data files whose partition-
-    * value tuple appears among the FRESH files' tuples are replaced;
-    * every other partition's files carry over untouched — the fresh
-    * files' directory segments themselves declare what is replaced, no
-    * data pass needed. Zero rows written ⇒ zero partitions replaced ⇒
-    * the table is unchanged (Hive/Spark dynamic semantics, NOT a
-    * truncate). An unpartitioned table degrades to a full overwrite.
-    * Positional-delete sidecars carry (entries for dropped files go
-    * inert with their file; entries for kept files stay live); C/R/B
-    * lines retire mechanically with the dropped files in [[commit]].
-    */
-  private[graft] def commitWrittenFilesDynamic(spark: SparkSession, path: String,
-                                               files: Seq[String]): Int = {
-    if (files.isEmpty) return currentVersion(path)
-    // fresh-file sidecar lines are base-independent: compute once, not
-    // per optimistic-retry round
-    val freshMeta = statsLinesFor(spark, path, files, statsColumns(path)) ++
-      rowLinesFor(spark, files) ++
-      lookupSpec(path).toSeq.flatMap(s => bloomLinesFor(spark, path, files, s))
-    withCommitRetry() {
-      val base = currentVersion(path)
-      val spec = partitionSpec(path, Some(base))
-      if (spec.isEmpty)
-        commit(path, files ++ freshMeta ++ specLines(path, base), base)
-      else {
-        val names = spec.map(_.name)
+  private def replacedBy(spark: SparkSession, path: String, files: Seq[String],
+                         mode: CowWriteMode, m: Manifest): Manifest = {
+    val spec = m.partitionTransforms
+    val names = spec.map(_.name)
+    // Replacing "a partition" is only sound when membership is
+    // decidable from file PATHS alone, so (a) key-delete sidecars must
+    // be folded first (a carried global key tombstone would hide
+    // same-keyed FRESH rows; dropping it would resurrect rows in
+    // untouched partitions), and (b) every live data file must carry
+    // the segments being matched (an old-layout file may contain
+    // replaced-partition rows — keeping it duplicates, dropping it
+    // loses other partitions' data).
+    def dropping(op: String, blind: String => Boolean,
+                 replaced: String => Boolean): Manifest = {
+      require(m.keyDeletes.isEmpty,
+        s"$op is ambiguous while merge-on-read key-delete sidecars are live " +
+          s"on $path — compact the table to fold them first")
+      val old = m.dataFiles.filter(blind)
+      require(old.isEmpty,
+        s"$op needs every live data file under the current partition layout; " +
+          s"${old.size} predate it (e.g. ${old.take(3).mkString(", ")}) — " +
+          "rewrite first: CowTable.cluster/compact")
+      m.copy(dataFiles = m.dataFiles.filterNot(replaced))
+    }
+    mode match {
+      case CowWriteMode.Append => m
+      case CowWriteMode.Truncate => m.truncated
+      case CowWriteMode.Dynamic if spec.isEmpty => m.truncated
+      case CowWriteMode.Dynamic =>
         val freshTuples = files.flatMap(partTupleOf(names, _)).toSet
         require(freshTuples.nonEmpty && files.forall(partTupleOf(names, _).isDefined),
           s"dynamic overwrite wrote files without the current partition segments " +
             s"under $path — writer/spec mismatch")
-        val baseFiles = snapshotFiles(path, Some(base))
-        requireReplaceSafe(path, base, "dynamic partition overwrite",
-          baseFiles.filter(partTupleOf(names, _).isEmpty))
-        val kept = baseFiles.filter(f => !freshTuples.contains(partTupleOf(names, f).get))
-        commit(path, kept ++ files ++ freshMeta ++
-          snapshotPositionDeletes(path, Some(base)).map(PosDeletePrefix + _) ++
-          specLines(path, base), base)
-      }
+        dropping("dynamic partition overwrite", partTupleOf(names, _).isEmpty,
+          f => freshTuples.contains(partTupleOf(names, f).get))
+      case CowWriteMode.Filtered(eqs) =>
+        require(eqs.nonEmpty, "filtered overwrite needs at least one equality")
+        val segs = eqs.map { case (src, value) =>
+          val t = spec.find(_.src == src).getOrElse(throw new UnsupportedOperationException(
+            s"INSERT OVERWRITE filter on '$src' which is not a partition source of $path"))
+          require(canOverwriteByEquality(path, src),
+            s"'$src' carries a pre-v2 time-transform spec — directories may be " +
+              "session-zone-dependent; rewrite the table first")
+          val srcType: types.DataType =
+            m.schema.flatMap(_.fields.find(_.name == src).map(_.dataType))
+              .orElse(files.headOption.flatMap(f =>
+                scala.util.Try(spark.read.parquet(f).schema).toOption
+                  .flatMap(_.fields.find(_.name == src).map(_.dataType))))
+              .getOrElse(spark.range(1).select(lit(value)).schema.head.dataType)
+          val v = Option(value).map(_ =>
+            spark.range(1).select(t.exprOf(lit(value), srcType).cast("string"))
+              .head.getString(0))
+          val dirVal = v match {
+            case Some(s) if s != null =>
+              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(s)
+            case _ => "__HIVE_DEFAULT_PARTITION__"
+          }
+          (s"/${t.name}=$dirVal/", s"/${t.name}=")
+        }
+        dropping("static partition overwrite",
+          f => segs.exists { case (_, marker) => !f.contains(marker) },
+          f => segs.forall { case (seg, _) => f.contains(seg) })
     }
   }
 
@@ -1112,58 +908,6 @@ object CowTable {
     partitionSpec(path, None).exists(t => t.src == src &&
       (!Set("day", "month", "year").contains(t.kind) ||
         partitionSpecVersion(path, None) >= PartitionTransform.SpecV))
-
-  /** Commit V2-written files with STATIC filter-overwrite semantics
-    * (`INSERT OVERWRITE … PARTITION (col=v, …)`): base data files whose
-    * directory segment for EVERY filtered transform equals the
-    * transform of the literal are replaced; everything else carries
-    * over. The literal→segment evaluation is [[prunedFilesEq]]'s own
-    * (cast to the source type, same transform expression, same
-    * escaping), so the dropped set is exactly the file set a read of
-    * that partition would serve.
-    */
-  private[graft] def commitWrittenFilesFiltered(spark: SparkSession, path: String,
-                                                files: Seq[String],
-                                                eqs: Seq[(String, Any)]): Int = {
-    require(eqs.nonEmpty, "filtered overwrite needs at least one equality")
-    val freshMeta = statsLinesFor(spark, path, files, statsColumns(path)) ++
-      rowLinesFor(spark, files) ++
-      lookupSpec(path).toSeq.flatMap(s => bloomLinesFor(spark, path, files, s))
-    withCommitRetry() {
-      val base = currentVersion(path)
-      val spec = partitionSpec(path, Some(base))
-      val segs = eqs.map { case (src, value) =>
-        val t = spec.find(_.src == src).getOrElse(throw new UnsupportedOperationException(
-          s"INSERT OVERWRITE filter on '$src' which is not a partition source of $path"))
-        require(canOverwriteByEquality(path, src),
-          s"'$src' carries a pre-v2 time-transform spec — directories may be " +
-            "session-zone-dependent; rewrite the table first")
-        val srcType: types.DataType =
-          declaredSchema(path, Some(base))
-            .flatMap(_.fields.find(_.name == src).map(_.dataType))
-            .orElse(files.headOption.flatMap(f =>
-              scala.util.Try(spark.read.parquet(f).schema).toOption
-                .flatMap(_.fields.find(_.name == src).map(_.dataType))))
-            .getOrElse(spark.range(1).select(lit(value)).schema.head.dataType)
-        val v = Option(value).map(_ =>
-          spark.range(1).select(t.exprOf(lit(value), srcType).cast("string"))
-            .head.getString(0))
-        val dirVal = v match {
-          case Some(s) if s != null =>
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(s)
-          case _ => "__HIVE_DEFAULT_PARTITION__"
-        }
-        (s"/${t.name}=$dirVal/", s"/${t.name}=")
-      }
-      val baseFiles = snapshotFiles(path, Some(base))
-      requireReplaceSafe(path, base, "static partition overwrite",
-        baseFiles.filter(f => segs.exists { case (_, marker) => !f.contains(marker) }))
-      val kept = baseFiles.filterNot(f => segs.forall { case (seg, _) => f.contains(seg) })
-      commit(path, kept ++ files ++ freshMeta ++
-        snapshotPositionDeletes(path, Some(base)).map(PosDeletePrefix + _) ++
-        specLines(path, base), base)
-    }
-  }
 
   /** Publish a STAGED table (atomic CTAS / RTAS — see
     * [[CowCatalog.stageCreate]]) into `realPath`: the staged table's
@@ -1183,7 +927,6 @@ object CowTable {
                                    realPath: String): Int = {
     val stagedData = Paths.get(stagedPath, "data")
     val destRoot = Paths.get(realPath, "data", s"staged${System.nanoTime()}")
-    val lines = manifestLines(stagedPath, None)
     val linked = scala.collection.mutable.Map.empty[String, String]
     def relocate(f: String): String = linked.getOrElseUpdate(f, {
       val p = Paths.get(f)
@@ -1194,46 +937,16 @@ object CowTable {
       Files.createLink(target, p)
       target.toString
     })
-    val rewritten = lines.flatMap { line =>
-      if (line.startsWith(WhenPrefix) || line.startsWith(TxnPrefix)) None
-      else if (line.startsWith(SchemaPrefix) || line.startsWith(PartitionPrefix) ||
-               line.startsWith(StatsColsPrefix) || line.startsWith(LookupPrefix))
-        Some(line)
-      else {
-        val prefix = Seq(DeletePrefix, PosDeletePrefix, StatsPrefix,
-          BloomPrefix, RowsPrefix).find(line.startsWith).getOrElse("")
-        val rest = line.stripPrefix(prefix)
-        val tab = rest.indexOf('\t')
-        val (f, payload) =
-          if (tab >= 0) (rest.substring(0, tab), rest.substring(tab))
-          else (rest, "")
-        Some(prefix + relocate(f) + payload)
-      }
-    }
+    val rewritten = manifest(stagedPath, None).mapFiles(relocate)
     val v =
       if (exists(realPath)) withCommitRetry() {
         val base = currentVersion(realPath)
-        val xLines = manifestLines(realPath, Some(base)).filter(_.startsWith(TxnPrefix))
-        commit(realPath, rewritten ++ xLines, base)
-      } else commit(realPath, rewritten, base = 0)
+        commit(realPath, rewritten.copy(txns = manifest(realPath, Some(base)).txns), base)
+      } else commit(realPath, rewritten.copy(txns = Map.empty), base = 0)
     CowCatalog.deleteTree(Paths.get(stagedPath))
     v
   }
 
-  /** OPTIMISTIC RETRY for read-modify-write commits ([[merge]],
-    * [[deleteMorKeys]], [[deleteMorWhere]], [[compact]], ...): re-runs
-    * `op` until it commits or `maxRetries` conflicts. `op` MUST
-    * re-read the current snapshot on each run (every CowTable
-    * operation does — they open with `currentVersion`), so each retry
-    * recomputes against the winner's snapshot and the result is
-    * SERIALIZABLE: equivalent to the losers running strictly after the
-    * winners. Full recompute is deliberately the only conflict policy
-    * — cheaper rebases (e.g. disjoint-file detection) trade
-    * correctness edge cases for speed the local scale cannot justify;
-    * the insert-only case that CAN skip recompute safely has its own
-    * fast path ([[append]]). A lost attempt's data files are orphans,
-    * reclaimed by [[expireSnapshots]]'s vacuum like any dead write.
-    */
   /** CREATE a zero-row table from a SCHEMA (the SQL `CREATE TABLE`
     * shape): no data files — the schema rides the manifest's `S` line
     * (exactly what schema evolution writes), so reads return an empty
@@ -1243,10 +956,7 @@ object CowTable {
   def createEmpty(path: String, schema: types.StructType,
                   transforms: Seq[PartitionTransform] = Seq.empty): Int = {
     require(!exists(path), s"table already exists at $path")
-    val spec =
-      if (transforms.isEmpty) Seq.empty
-      else Seq(PartitionPrefix + PartitionTransform.encode(transforms))
-    commit(path, (SchemaPrefix + schema.json) +: spec,
+    commit(path, Manifest().withSchema(schema).withPartitionSpec(transforms),
       base = (listVersions(path) :+ 0).max)
   }
 
@@ -1260,11 +970,26 @@ object CowTable {
   def overwrite(spark: SparkSession, path: String, df: DataFrame): Int =
     withCommitRetry() {
       val base = currentVersion(path)
-      commit(path,
-        writeDataWithStats(df, path, partitionSpec(path, Some(base))) ++
-          specLines(path, base), base)
+      commit(path, manifest(path, Some(base)).truncated.withFiles(
+        writeDataWithStats(df, path, partitionSpec(path, Some(base)))), base)
     }
 
+  /** OPTIMISTIC RETRY for read-modify-write commits ([[merge]],
+    * [[deleteMorKeys]], [[deleteMorWhere]], [[compact]], ...): re-runs
+    * `op` until it commits or `maxRetries` conflicts. `op` MUST
+    * re-read the current snapshot on each run (every CowTable
+    * operation does — they open with `currentVersion`), so each retry
+    * recomputes against the winner's snapshot and the result is
+    * SERIALIZABLE: equivalent to the losers running strictly after the
+    * winners. Full recompute is deliberately the only conflict policy
+    * — cheaper rebases (e.g. disjoint-file detection) trade
+    * correctness edge cases for speed the local scale cannot justify;
+    * the txn-aware writers ([[append]], [[commitWritten]],
+    * [[upsertMorPos]]) retry here through [[commitTxn]], which re-runs
+    * their manifest step but never their data write. A lost attempt's
+    * data files are orphans, reclaimed by [[expireSnapshots]]'s vacuum
+    * like any dead write.
+    */
   def withCommitRetry(maxRetries: Int = 5)(op: => Int): Int = {
     var attempts = 0
     while (true) {
@@ -1291,11 +1016,7 @@ object CowTable {
     */
   def setPartitionSpec(path: String, transforms: Seq[PartitionTransform]): Int = {
     val base = currentVersion(path)
-    val kept = manifestLines(path, Some(base)).filterNot(_.startsWith(PartitionPrefix))
-    val spec =
-      if (transforms.isEmpty) Seq.empty
-      else Seq(PartitionPrefix + PartitionTransform.encode(transforms))
-    commit(path, kept ++ spec, base)
+    commit(path, manifest(path, Some(base)).withPartitionSpec(transforms), base)
   }
 
   /** Hidden-partition-PRUNED equality read: keep only the files whose
@@ -1363,9 +1084,7 @@ object CowTable {
   /** The snapshot's declared stats columns ([[setStatsColumns]]). */
   def statsColumns(path: String, asOf: Option[Int] = None): Seq[String] =
     if (!exists(path)) Seq.empty
-    else manifestLines(path, asOf).find(_.startsWith(StatsColsPrefix))
-      .map(_.stripPrefix(StatsColsPrefix).split(",").toSeq.filter(_.nonEmpty))
-      .getOrElse(Seq.empty)
+    else manifest(path, asOf).statsColumns
 
   /** DECLARE the table's stats columns and BACKFILL: per-file
     * [min, max, nonNullCount] over every current data file are
@@ -1380,25 +1099,13 @@ object CowTable {
     require(cols.forall(c => !c.contains(",") && !c.contains("\t") && !c.contains("\n")),
       s"stats column names must not contain ',', TAB or newline: $cols")
     val base = currentVersion(path)
-    val kept = manifestLines(path, Some(base)).filterNot(l =>
-      l.startsWith(StatsColsPrefix) || l.startsWith(StatsPrefix))
-    val k = if (cols.isEmpty) Seq.empty
-            else Seq(StatsColsPrefix + cols.mkString(","))
-    commit(path, kept ++ k ++
-      statsLinesFor(spark, path, snapshotFiles(path, Some(base)), cols), base)
+    commit(path, manifest(path, Some(base)).copy(statsColumns = cols,
+      stats = statsFor(spark, path, snapshotFiles(path, Some(base)), cols)), base)
   }
 
-  /** The declared write-side z-order spec (see [[ZOrderPrefix]]). */
+  /** The declared write-side z-order spec (see [[Manifest.zorder]]). */
   def zorderSpec(path: String, asOf: Option[Int] = None): Option[ZOrderSpec] =
-    manifestLines(path, asOf).find(_.startsWith(ZOrderPrefix)).map { l =>
-      val body = l.stripPrefix(ZOrderPrefix)
-      val sp = body.indexOf(' ')
-      ZOrderSpec(body.take(sp).toInt,
-        body.drop(sp + 1).split(',').toIndexedSeq.map { e =>
-          val Array(c, mn, mx) = e.split(':')
-          (c, mn.toDouble, mx.toDouble)
-        })
-    }
+    manifest(path, asOf).zorder
 
   /** Declare write-side Z-ORDER clustering: every subsequent INSERT
     * through the V2 face range-shuffles and sorts on the interleaved
@@ -1445,16 +1152,14 @@ object CowTable {
     }
     val bits = math.min(20, 62 / bounds.size)
     val base = currentVersion(path)
-    val kept = manifestLines(path, Some(base)).filterNot(_.startsWith(ZOrderPrefix))
-    commit(path, kept ++ Seq(ZOrderPrefix + s"$bits " +
-      bounds.map { case (c, mn, mx) => s"$c:$mn:$mx" }.mkString(",")), base)
+    commit(path, manifest(path, Some(base)).copy(zorder = Some(ZOrderSpec(bits, bounds))),
+      base)
   }
 
   /** Drop the write-side z-order declaration (inserts stop shuffling). */
   def clearZorderColumns(spark: SparkSession, path: String): Int = {
     val base = currentVersion(path)
-    commit(path,
-      manifestLines(path, Some(base)).filterNot(_.startsWith(ZOrderPrefix)), base)
+    commit(path, manifest(path, Some(base)).copy(zorder = None), base)
   }
 
   /** One row's z-value under a spec: clamped min/max normalization to
@@ -1493,16 +1198,17 @@ object CowTable {
     case _ => false
   }
 
-  /** Fresh `C` lines for newly written `files` — one column-pruned
-    * read of just those files, grouped by `_metadata.file_path`.
+  /** Fresh `C` entries (file → stats JSON) for newly written `files` —
+    * one column-pruned read of just those files, grouped by
+    * `_metadata.file_path`.
     */
-  private def statsLinesFor(spark: SparkSession, path: String,
-                            files: Seq[String], cols: Seq[String]): Seq[String] = {
-    if (cols.isEmpty || files.isEmpty) return Seq.empty
+  private def statsFor(spark: SparkSession, path: String,
+                       files: Seq[String], cols: Seq[String]): Map[String, String] = {
+    if (cols.isEmpty || files.isEmpty) return Map.empty
     val df = spark.read.parquet(files: _*)
     val typed = cols.filter(df.columns.contains)
       .map(c => c -> df.schema(c).dataType).filter(ct => statsSupported(ct._2))
-    if (typed.isEmpty) return Seq.empty
+    if (typed.isEmpty) return Map.empty
     // 4th element (round 17): the column's exact per-file SUM, recorded
     // for integral (wraps mod 2^64 — associative, so per-file partials
     // re-sum to the scan's answer) and decimal (exact string) columns —
@@ -1544,13 +1250,13 @@ object CowTable {
               JLong(r.getLong(3 + i * 4)),
               sumJson(r.get(4 + i * 4), t)))
           }.toList)
-          StatsPrefix + f + "\t" + org.json4s.jackson.JsonMethods.compact(
+          f -> org.json4s.jackson.JsonMethods.compact(
             org.json4s.jackson.JsonMethods.render(obj))
         }
-      }
+      }.toMap
   }
 
-  /** Fresh `R <file>\t<count>` lines for newly written files — the
+  /** Fresh `R` entries (file → row count) for newly written files — the
     * per-file row counts behind manifest-only `COUNT(*)` and the
     * planner's `numRows` estimate. One metadata-column-only read of
     * just those files: projecting nothing but `_metadata.file_path`
@@ -1558,8 +1264,8 @@ object CowTable {
     * counts straight from parquet metadata), so this costs a listing,
     * not a scan.
     */
-  private def rowLinesFor(spark: SparkSession, files: Seq[String]): Seq[String] = {
-    if (files.isEmpty) return Seq.empty
+  private def rowCountsFor(spark: SparkSession, files: Seq[String]): Map[String, Long] = {
+    if (files.isEmpty) return Map.empty
     val byNorm = files.map(f => Paths.get(f).normalize.toString -> f).toMap
     spark.read.parquet(files: _*)
       .groupBy(col("_metadata.file_path").as("__f")).count()
@@ -1567,11 +1273,11 @@ object CowTable {
         val norm = Paths.get(
           new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)
           .normalize.toString
-        byNorm.get(norm).map(f => RowsPrefix + f + "\t" + r.getLong(1))
-      }
+        byNorm.get(norm).map(f => f -> r.getLong(1))
+      }.toMap
   }
 
-  /** The snapshot's per-file row counts (`R` lines). Files written
+  /** The snapshot's per-file row counts (`R` entries). Files written
     * before round 16 have no entry — consumers must fall back to
     * scanning when a referenced file is missing here.
     */
@@ -1588,8 +1294,8 @@ object CowTable {
     val have = fileRowCounts(path, Some(base)).keySet
     val missing = snapshotFiles(path, Some(base)).filterNot(have.contains)
     if (missing.isEmpty) return base
-    commit(path, manifestLines(path, Some(base)) ++
-      rowLinesFor(spark, missing), base)
+    val m = manifest(path, Some(base))
+    commit(path, m.copy(rowCounts = m.rowCounts ++ rowCountsFor(spark, missing)), base)
   }
 
   /** A collected min/max → portable JSON. Dates persist as epoch days,
@@ -1696,13 +1402,7 @@ object CowTable {
   def lookupSpec(path: String, asOf: Option[Int] = None)
       : Option[(Seq[String], Int, Int)] =
     if (!exists(path)) None
-    else manifestLines(path, asOf).find(_.startsWith(LookupPrefix)).flatMap { l =>
-      l.stripPrefix(LookupPrefix).split(" ", 3) match {
-        case Array(d, b, cs) => scala.util.Try(
-          (cs.split(",").toSeq.filter(_.nonEmpty), d.toInt, b.toInt)).toOption
-        case _ => None
-      }
-    }
+    else manifest(path, asOf).lookupSpec
 
   /** DECLARE the table's point-lookup columns and BACKFILL: per data
     * file, each declared column gets either its exact distinct-value
@@ -1729,14 +1429,10 @@ object CowTable {
     require(dictMax >= 0 && bloomBits > 0 && bloomBits % 8 == 0,
       s"need dictMax >= 0 and bloomBits a positive multiple of 8, got $dictMax/$bloomBits")
     val base = currentVersion(path)
-    val kept = manifestLines(path, Some(base)).filterNot(l =>
-      l.startsWith(LookupPrefix) || l.startsWith(BloomPrefix))
-    if (cols.isEmpty) return commit(path, kept, base)
-    val spec = (cols, dictMax, bloomBits)
-    commit(path,
-      (kept :+ s"$LookupPrefix$dictMax $bloomBits ${cols.mkString(",")}") ++
-        bloomLinesFor(spark, path, snapshotFiles(path, Some(base)), spec),
-      base)
+    val spec = Option.when(cols.nonEmpty)((cols, dictMax, bloomBits))
+    commit(path, manifest(path, Some(base)).copy(lookupSpec = spec,
+      lookups = spec.fold(Map.empty[String, String])(
+        lookupsFor(spark, path, snapshotFiles(path, Some(base)), _))), base)
   }
 
   private[sinks] val BloomK = 4
@@ -1783,18 +1479,19 @@ object CowTable {
     case _ => None
   }
 
-  /** Fresh `B` lines for newly written `files` under `spec` — one
+  /** Fresh `B` entries (file → lookup JSON) for newly written `files`
+    * under `spec` — one
     * column-pruned, per-file-distinct pass per declared column. Dict
     * values and bloom positions are both BOUNDED per file (dictMax
     * values / bloomBits positions), so the driver-side collect is
     * metadata-sized no matter how many rows a file holds.
     */
-  private def bloomLinesFor(spark: SparkSession, path: String,
-                            files: Seq[String],
-                            spec: (Seq[String], Int, Int)): Seq[String] = {
+  private def lookupsFor(spark: SparkSession, path: String,
+                         files: Seq[String],
+                         spec: (Seq[String], Int, Int)): Map[String, String] = {
     import org.json4s._
     val (cols, dictMax, bits) = spec
-    if (cols.isEmpty || files.isEmpty) return Seq.empty
+    if (cols.isEmpty || files.isEmpty) return Map.empty
     val df = spark.read.option("mergeSchema", "true").parquet(files: _*)
     val byNorm = files.map(f => Paths.get(f).normalize.toString -> f).toMap
     def fileOf(raw: String): Option[String] = byNorm.get(Paths.get(
@@ -1820,7 +1517,9 @@ object CowTable {
         // distinct exchange (2-3 full re-reads per declared column,
         // the dominant cost of every sidecar-writing commit).
         // Executor blocks spill to disk, so a table-wide backfill
-        // stays bounded; the blocks free with the frame.
+        // stays bounded. Nothing unpersists them here: the blocks stay
+        // until the ContextCleaner collects the checkpointed RDD after
+        // this column's pass leaves it unreachable (a later driver GC).
         val base = raw.select(col("__f"), canon.as("__v"))
           .filter(col("__v").isNotNull).distinct()
           .localCheckpoint()
@@ -1856,8 +1555,8 @@ object CowTable {
         }
       }
     }
-    perFile.toSeq.map { case (f, colEntries) =>
-      BloomPrefix + f + "\t" + org.json4s.jackson.JsonMethods.compact(
+    perFile.toMap.map { case (f, colEntries) =>
+      f -> org.json4s.jackson.JsonMethods.compact(
         org.json4s.jackson.JsonMethods.render(JObject(colEntries.reverse: _*)))
     }
   }
@@ -2658,54 +2357,35 @@ object CowTable {
   def upsertMorPos(spark: SparkSession, path: String, keys: DataFrame,
                    adds: DataFrame, txn: Option[(String, Long)] = None,
                    maxRetries: Int = 5): Int = {
-    txn.foreach { case (app, _) =>
-      require(!app.exists(_.isWhitespace), s"txn appId must not contain whitespace: '$app'")
-    }
-    def replayed: Boolean = txn.exists { case (app, v) => txnVersion(path, app) >= v }
-    if (replayed) return currentVersion(path)
+    if (replayed(path, txn)) return currentVersion(path)
     val fresh =
-      if (adds.isEmpty) Seq.empty
+      if (adds.isEmpty) Manifest()
       else writeDataWithStats(adds, path, partitionSpec(path))
-    var attempts = 0
-    while (true) {
-      val base = currentVersion(path)
-      if (replayed) return base // same-app concurrent writer won the race
+    commitTxn(path, txn, maxRetries) { (base, m) =>
       // positions recompute against each attempt's base: a concurrent
       // compact/cluster relocates rows, so the run ranges must be the
       // winner-snapshot's (withCommitRetry's serializable contract)
-      val matched = readWithPos(spark, path, Some(base))
+      val sidecar = writePosRanges(path, readWithPos(spark, path, Some(base))
         .join(broadcast(keys), keys.columns.toSeq, "left_semi")
-        .select(col("__file"), col("__pos"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("__file").orderBy("__pos")
-      val ranges = matched
-        .withColumn("__run", col("__pos") - row_number().over(w))
-        .groupBy(col("__file"), col("__run"))
-        .agg(min("__pos").as("__lo"), max("__pos").as("__hi"))
-        .select("__file", "__lo", "__hi")
-      val sidecar =
-        if (matched.isEmpty) Seq.empty
-        else writeData(ranges.coalesce(1), path)
-      val kept = txn.fold(manifestLines(path, Some(base))) { case (app, _) =>
-        manifestLines(path, Some(base))
-          .filterNot(_.startsWith(TxnPrefix + app + " "))
-      }
-      val mark = txn.map { case (app, v) => s"$TxnPrefix$app $v" }.toSeq
-      if (sidecar.isEmpty && fresh.isEmpty && mark.isEmpty) return base
-      try return commit(path,
-        kept ++ sidecar.map(PosDeletePrefix + _) ++ fresh ++ mark, base)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > maxRetries) throw e
-      }
+        .select(col("__file"), col("__pos")))
+      Option.when(sidecar.nonEmpty || fresh.dataFiles.nonEmpty || txn.nonEmpty)(
+        m.copy(posDeletes = m.posDeletes ++ sidecar).withFiles(fresh))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   private def commitPosRanges(spark: SparkSession, path: String,
                               matched: DataFrame, base: Int): Int = {
-    if (matched.isEmpty) return base
+    val sidecar = writePosRanges(path, matched)
+    if (sidecar.isEmpty) return base
+    val m = manifest(path, Some(base))
+    commit(path, m.copy(posDeletes = m.posDeletes ++ sidecar), base)
+  }
+
+  /** The positional sidecar of `matched` (`__file`, `__pos`) rows —
+    * none when nothing matched.
+    */
+  private def writePosRanges(path: String, matched: DataFrame): Seq[String] = {
+    if (matched.isEmpty) return Seq.empty
     // collapse consecutive ordinals into runs: pos - rank is constant
     // within a run (per file) — the classic gaps-and-islands grouping,
     // partitioned by file so no global sort
@@ -2716,9 +2396,7 @@ object CowTable {
       .groupBy(col("__file"), col("__run"))
       .agg(min("__pos").as("__lo"), max("__pos").as("__hi"))
       .select("__file", "__lo", "__hi")
-    val sidecar = writeData(ranges.coalesce(1), path)
-    commit(path, manifestLines(path, Some(base)) ++
-      sidecar.map(PosDeletePrefix + _), base)
+    writeData(ranges.coalesce(1), path)
   }
 
   /** The logical snapshot with each row's physical address attached
@@ -2753,8 +2431,8 @@ object CowTable {
           matched.columns.mkString("[", ", ", "]"))
     }
     val sidecar = writeData(matched.coalesce(1), path)
-    commit(path, manifestLines(path, Some(base)) ++
-      sidecar.map(DeletePrefix + _), base)
+    val m = manifest(path, Some(base))
+    commit(path, m.copy(keyDeletes = m.keyDeletes ++ sidecar), base)
   }
 
   /** MERGE (upsert): rows in `updates` replace current rows with the
@@ -2807,22 +2485,22 @@ object CowTable {
     // age. Sidecars keyed on something OTHER than the merge key
     // (composite-key deletes) carry over untouched: their deletes are
     // not addressed by this merge's key, so no un-delete applies.
-    val sidecars = snapshotDeletes(path, Some(base))
-    val delLines =
-      if (sidecars.isEmpty) Seq.empty
-      else if (spark.read.parquet(sidecars.head).columns.toSeq != Seq(key))
-        sidecars.map(DeletePrefix + _)
+    val m = manifest(path, Some(base))
+    val sidecars = m.keyDeletes
+    val keyDels =
+      if (sidecars.isEmpty) sidecars
+      else if (spark.read.parquet(sidecars.head).columns.toSeq != Seq(key)) sidecars
       else {
         val remaining = spark.read.parquet(sidecars: _*).distinct()
           .join(broadcast(keys), Seq(key), "left_anti")
-        if (remaining.isEmpty) Seq.empty
-        else writeData(remaining.coalesce(1), path).map(DeletePrefix + _)
+        if (remaining.isEmpty) Vector.empty
+        else writeData(remaining.coalesce(1), path)
       }
     // Positional sidecars carry over: entries for carried files stay
     // live; entries for rewritten files point at paths no longer in
     // the manifest and are inert (compact retires them).
-    commit(path, untouched ++ rewritten ++ delLines ++
-      posDels.map(PosDeletePrefix + _) ++ specLines(path, base), base)
+    commit(path, m.copy(dataFiles = untouched.toVector, keyDeletes = keyDels)
+      .withFiles(rewritten), base)
   }
 
   /** Implicit SCHEMA WIDENING: `merge` accepts updates with ADDED
@@ -2875,9 +2553,7 @@ object CowTable {
     }.toSet
 
   private def commitSchema(path: String, schema: types.StructType, base: Int): Int =
-    commit(path,
-      manifestLines(path, Some(base)).filterNot(_.startsWith(SchemaPrefix)) :+
-        (SchemaPrefix + schema.json), base)
+    commit(path, manifest(path, Some(base)).withSchema(schema), base)
 
   /** All names any declared column's rename lineage still claims. A new
     * column may not take one of these: the read-side coalesce group for
@@ -2906,16 +2582,16 @@ object CowTable {
       }
     })
 
-  /** [[specLines]] for a commit that REWRITES every data file under the
-    * declared names: the schema line drops its rename lineage (see
-    * [[stripLineage]]); partition/txn/stats lines carry unchanged.
+  /** The commit of a rewrite of EVERY data file under the declared
+    * names ([[compact]]/[[cluster]]): `fresh` replaces all data files and
+    * folds both sidecar kinds (the logical read applied them), and the
+    * schema drops its rename lineage (see [[stripLineage]]); the other
+    * spec lines carry unchanged.
     */
-  private def specLinesRewritten(path: String, base: Int): Seq[String] =
-    specLines(path, base).map { l =>
-      if (!l.startsWith(SchemaPrefix)) l
-      else SchemaPrefix + stripLineage(types.DataType
-        .fromJson(l.stripPrefix(SchemaPrefix)).asInstanceOf[types.StructType]).json
-    }
+  private def commitRewrite(path: String, fresh: Manifest, base: Int): Int = {
+    val m = manifest(path, Some(base)).truncated
+    commit(path, m.schema.fold(m)(s => m.withSchema(stripLineage(s))).withFiles(fresh), base)
+  }
 
   /** ADD a column (type as a DDL string, e.g. "bigint", "decimal(12,2)").
     * Pre-evolution rows read null. The name must be genuinely new —
@@ -3031,8 +2707,7 @@ object CowTable {
     // rename lineage STRIPPED — no surviving file carries an old name,
     // and live lineage would let addColumn re-introduce a lineage name
     // into the read-side coalesce groups (ADVICE r15).
-    commit(path, writeDataWithStats(rows, path, partitionSpec(path, Some(base))) ++
-      specLinesRewritten(path, base), base)
+    commitRewrite(path, writeDataWithStats(rows, path, partitionSpec(path, Some(base))), base)
   }
 
   /** INCREMENTAL VIEW MAINTENANCE: refresh a grouped-aggregate
@@ -3348,8 +3023,8 @@ object CowTable {
       .repartitionByRange(files, col("__z"))
       .drop(("__z" +: (0 until n).map(s"__q" + _)) ++
         zcols.flatMap(c => Seq(s"__mn_$c", s"__mx_$c")): _*)
-    commit(path, writeDataWithStats(clustered, path, partitionSpec(path, Some(base))) ++
-      specLinesRewritten(path, base), base)
+    commitRewrite(path,
+      writeDataWithStats(clustered, path, partitionSpec(path, Some(base))), base)
   }
 
   /** DELETE rows matching `predicate`: rewrite only files containing
@@ -3377,8 +3052,8 @@ object CowTable {
       .collect().map(_.getString(0)).toSet
     val untouched = current.filterNot(f => touched.exists(t => samePath(f, t)))
     val toRewrite = current.filter(f => touched.exists(t => samePath(f, t)))
-    val files =
-      if (toRewrite.isEmpty) untouched
+    val fresh =
+      if (toRewrite.isEmpty) Manifest()
       else {
         // rewrite from the LOGICAL rows w.r.t. positional sidecars: a
         // raw read would resurrect positionally-deleted rows in the new
@@ -3386,16 +3061,15 @@ object CowTable {
         val rawT = spark.read.option("mergeSchema", "true").parquet(toRewrite: _*)
         val logical0 = applyPosDeletes(spark, rawT, posDels)
         val logical = schema.fold(logical0)(projectDeclared(logical0, _))
-        untouched ++ writeDataWithStats(logical.filter(not(deleteCond)), path,
+        writeDataWithStats(logical.filter(not(deleteCond)), path,
           partitionSpec(path, Some(base)))
       }
     // MoR key sidecars carry over untouched: a sidecar-deleted row
     // stays deleted whether or not its physical row also matched here.
     // Positional entries for carried files stay live; entries for
     // rewritten files are inert (path left the manifest).
-    commit(path, files ++
-      snapshotDeletes(path, Some(base)).map(DeletePrefix + _) ++
-      posDels.map(PosDeletePrefix + _) ++ specLines(path, base), base)
+    commit(path, manifest(path, Some(base)).copy(dataFiles = untouched.toVector)
+      .withFiles(fresh), base)
   }
 
   /** UPDATE rows matching `predicate`: apply `sets` (column → new
@@ -3469,10 +3143,8 @@ object CowTable {
         case None => col(f.name)
       }
     }.toIndexedSeq: _*)
-    val files = untouched ++
-      writeDataWithStats(out, path, partitionSpec(path, Some(base)))
-    commit(path, files ++ keyDels.map(DeletePrefix + _) ++
-      posDels.map(PosDeletePrefix + _) ++ specLines(path, base), base)
+    commit(path, manifest(path, Some(base)).copy(dataFiles = untouched.toVector)
+      .withFiles(writeDataWithStats(out, path, partitionSpec(path, Some(base)))), base)
   }
 
   /** String-expression convenience for [[update]] (the API twin of
@@ -3671,10 +3343,10 @@ object CowTable {
     val dataRoot = Paths.get(path, "data")
     var vacuumed = 0
     if (Files.exists(dataRoot)) {
-      Files.walk(dataRoot).iterator().asScala
+      scala.util.Using.resource(Files.walk(dataRoot))(_.iterator().asScala
         .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet") &&
           !live.contains(p.toString))
-        .toList // materialize before deleting out from under the walk
+        .toList) // materialize before deleting out from under the walk
         .foreach { p => Files.delete(p); vacuumed += 1 }
     }
     (old.size, vacuumed)
@@ -3702,7 +3374,7 @@ object CowTable {
     // FULL manifest lines, not just data files: restoring past a MoR
     // delete must re-publish the old sidecar set exactly (dropping the
     // sidecar lines would resurrect rows deleted BEFORE toVersion)
-    commit(path, manifestLines(path, Some(toVersion)), currentVersion(path))
+    commit(path, manifest(path, Some(toVersion)), currentVersion(path))
 
   /** SHALLOW CLONE (the Delta `CLONE ... SHALLOW` shape): create an
     * INDEPENDENT table at `dest` whose v1 manifest references the
@@ -3724,7 +3396,7 @@ object CowTable {
     require(!exists(dest), s"clone destination $dest already exists")
     val v = asOf.getOrElse(currentVersion(src))
     Files.createDirectories(Paths.get(dest))
-    commit(dest, manifestLines(src, Some(v)), 0)
+    commit(dest, manifest(src, Some(v)), 0)
   }
 
   def branchPath(path: String, name: String): String =
@@ -3733,8 +3405,8 @@ object CowTable {
   def listBranches(path: String): Seq[String] = {
     val d = Paths.get(path, "_branches")
     if (!Files.exists(d)) Seq.empty
-    else Files.list(d).iterator().asScala.filter(Files.isDirectory(_))
-      .map(_.getFileName.toString).toSeq.sorted
+    else scala.util.Using.resource(Files.list(d))(_.iterator().asScala
+      .filter(Files.isDirectory(_)).map(_.getFileName.toString).toVector.sorted)
   }
 
   /** Fork a branch at the parent's CURRENT snapshot. Records the fork
@@ -3747,7 +3419,7 @@ object CowTable {
     Files.write(Paths.get(bp, "_fork"),
       currentVersion(path).toString.getBytes(StandardCharsets.UTF_8))
     // full lines: the fork inherits the parent's MoR sidecars too
-    commit(bp, manifestLines(path, None), 0)
+    commit(bp, manifest(path, None), 0)
   }
 
   /** The fork point recorded at [[createBranch]]. */
@@ -3787,24 +3459,19 @@ object CowTable {
     // (silent row resurrection). Key sidecars and positions on
     // PARENT-owned files are path-stable, so only the combination
     // below is unsafe — fail it loudly; compact folds the positions.
-    val blines = manifestLines(bp, None)
-    val branchData = blines.filterNot(isMetaLine).exists(f => !f.startsWith(parentData))
-    val branchPos = blines.filter(_.startsWith(PosDeletePrefix))
-      .map(_.stripPrefix(PosDeletePrefix)).exists(f => !f.startsWith(parentData))
+    val branch = manifest(bp, None)
+    val branchData = branch.dataFiles.exists(f => !f.startsWith(parentData))
+    val branchPos = branch.posDeletes.exists(f => !f.startsWith(parentData))
     if (branchData && branchPos)
       throw new IllegalStateException(
         s"publish: branch '$name' carries positional delete sidecars alongside " +
           "branch-written data files; relocation would invalidate the " +
           "file-path-addressed positions — compact the branch first")
-    // relocate data files AND every line that references them by path —
-    // MoR sidecar lines (key + positional) and per-file stat lines
-    // (C stats / B lookups / R row counts, whose `<file>\t<payload>`
-    // keeps its payload around the relocated path). Pure spec lines
-    // (schema, partition, txn watermarks, stats/lookup specs) carry
-    // verbatim; the branch's own commit stamp never relocates —
-    // commit() below stamps the publish itself.
-    // one physical link per branch file even when multiple lines
-    // reference it (its data line + its C/B/R lines): memoized target
+    // relocate data files AND every entry that references them by path
+    // (MoR sidecars, C/R/B per-file entries); spec fields carry
+    // verbatim and commit() stamps the publish itself. One physical
+    // link per branch file even when several entries reference it:
+    // memoized target
     val linked = scala.collection.mutable.Map.empty[String, String]
     def relocate(f: String): String =
       if (f.startsWith(parentData)) f
@@ -3820,23 +3487,7 @@ object CowTable {
         Files.createLink(target, p)
         target.toString
       })
-    val relocated = manifestLines(bp, None)
-      .filterNot(_.startsWith(WhenPrefix)).map { line =>
-      if (line.startsWith(SchemaPrefix) || line.startsWith(PartitionPrefix) ||
-          line.startsWith(TxnPrefix) || line.startsWith(StatsColsPrefix) ||
-          line.startsWith(LookupPrefix)) line
-      else {
-        val prefix = Seq(DeletePrefix, PosDeletePrefix, StatsPrefix,
-          BloomPrefix, RowsPrefix).find(line.startsWith).getOrElse("")
-        val rest = line.stripPrefix(prefix)
-        val tab = rest.indexOf('\t')
-        val (f, payload) =
-          if (tab >= 0) (rest.substring(0, tab), rest.substring(tab))
-          else (rest, "")
-        prefix + relocate(f) + payload
-      }
-    }
-    commit(path, relocated, cur)
+    commit(path, branch.mapFiles(relocate), cur)
   }
 
   /** Drop a branch's metadata and directory (manifests, fork marker,
@@ -3848,7 +3499,8 @@ object CowTable {
   def dropBranch(path: String, name: String): Unit = {
     val bp = Paths.get(branchPath(path, name))
     if (Files.exists(bp))
-      Files.walk(bp).iterator().asScala.toList.reverse.foreach(Files.delete)
+      scala.util.Using.resource(Files.walk(bp))(_.iterator().asScala.toList)
+        .reverse.foreach(Files.delete)
   }
 
   // input_file_name() returns a file URI; manifests store plain paths

@@ -101,10 +101,10 @@ object Sources {
     // and parallel write tasks finish in arbitrary order — pin mtimes
     // to the part-file index (range partition i = time range i) so the
     // replay sequence actually follows event time
-    val parts = java.nio.file.Files.list(java.nio.file.Paths.get(prepDir))
-      .iterator().asScala
+    val parts = scala.util.Using.resource(
+        java.nio.file.Files.list(java.nio.file.Paths.get(prepDir)))(_.iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-"))
-      .toSeq.sortBy(_.getFileName.toString)
+      .toVector.sortBy(_.getFileName.toString))
     val base = java.nio.file.attribute.FileTime.fromMillis(1000000000000L)
     parts.zipWithIndex.foreach { case (p, i) =>
       java.nio.file.Files.setLastModifiedTime(p,
