@@ -385,11 +385,7 @@ object ScaleBench {
     import graft.sinks.CowTable
     val ivmDir = "/tmp/graft_scalebench_ivm"
     val root = java.nio.file.Paths.get(ivmDir)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(root)) graft.sinks.CowCatalog.deleteTree(root)
     def aggOf(df: org.apache.spark.sql.DataFrame) =
       df.groupBy("grp").agg(count(lit(1)).as("n"),
                             sum("v").cast("long").as("s"))
@@ -430,11 +426,7 @@ object ScaleBench {
     import graft.sinks.CowTable
     val jDir = "/tmp/graft_scalebench_ivmj"
     val jRoot = java.nio.file.Paths.get(jDir)
-    if (java.nio.file.Files.exists(jRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(jRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(jRoot)) graft.sinks.CowCatalog.deleteTree(jRoot)
     val (pa, pb) = (s"$jDir/fact", s"$jDir/dim")
     def joinOf(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
       a.join(b, Seq("id"), "full").select(col("id"), col("v"), col("tier"))
@@ -488,11 +480,7 @@ object ScaleBench {
     import graft.sinks.{CowTable, Sinks}
     val kDir = "/tmp/graft_scalebench_fkj"
     val kRoot = java.nio.file.Paths.get(kDir)
-    if (java.nio.file.Files.exists(kRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(kRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(kRoot)) graft.sinks.CowCatalog.deleteTree(kRoot)
     val (pkf, pkd, pkv) = (s"$kDir/fact", s"$kDir/dim", s"$kDir/view")
     CowTable.create(spark.range(40000000L).select(col("id").as("oid"),
         (col("id") / 10L).cast("long").as("cust"),
@@ -546,11 +534,7 @@ object ScaleBench {
     import graft.sinks.CowTable
     val stDir = "/tmp/graft_scalebench_stats"
     val stRoot = java.nio.file.Paths.get(stDir)
-    if (java.nio.file.Files.exists(stRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(stRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(stRoot)) graft.sinks.CowCatalog.deleteTree(stRoot)
     CowTable.create(spark.range(20000000L)
       .select((col("id") * 7919L % 20000000L).as("v"),
               (col("id") % 1000L).as("payload"))
@@ -590,11 +574,7 @@ object ScaleBench {
     import graft.sinks.CowTable
     val vDir = "/tmp/graft_scalebench_ivf"
     val vRoot = java.nio.file.Paths.get(vDir)
-    if (java.nio.file.Files.exists(vRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(vRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(vRoot)) graft.sinks.CowCatalog.deleteTree(vRoot)
     val (pvc, pvi) = (s"$vDir/corpus", s"$vDir/index")
     // OVERLAPPING corpus (round 14, verdict r13 #5): vectors sit on a
     // smooth 16d curve x_j(t) = sin(2pi t (j+1) + j), t = id/N, plus
@@ -964,11 +944,7 @@ object ScaleBench {
     import graft.sources.CowCdcSourceProvider
     val cdcDir = "/tmp/graft_scalebench_cdc"
     val cdcRoot = java.nio.file.Paths.get(cdcDir)
-    if (java.nio.file.Files.exists(cdcRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(cdcRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(cdcRoot)) graft.sinks.CowCatalog.deleteTree(cdcRoot)
     val up = s"$cdcDir/up"; val mir = s"$cdcDir/mirror"
     CowTable.create(spark.range(5000000L).select(col("id"),
         pmod(xxhash64(col("id")), lit(100000L)).as("v"))
@@ -1041,11 +1017,7 @@ object ScaleBench {
     import graft.sinks.{CowTable, PartitionTransform}
     val spjWh = "/tmp/graft_scalebench_spj"
     val spjRoot = java.nio.file.Paths.get(spjWh)
-    if (java.nio.file.Files.exists(spjRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(spjRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(spjRoot)) graft.sinks.CowCatalog.deleteTree(spjRoot)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$spjWh/ns"))
     val spjN = 32
     CowTable.create(spark.range(10000000L).select(col("id"),
@@ -1102,11 +1074,7 @@ object ScaleBench {
     import graft.sinks.CowTable
     val dppWh = "/tmp/graft_scalebench_dpp"
     val dppRoot = java.nio.file.Paths.get(dppWh)
-    if (java.nio.file.Files.exists(dppRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dppRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(dppRoot)) graft.sinks.CowCatalog.deleteTree(dppRoot)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dppWh/ns"))
     // the measured columns include a ~64-byte payload so the scan-IO
     // delta is visible at local scale (id+v alone page-cache to noise)
@@ -1170,11 +1138,7 @@ object ScaleBench {
     import graft.sinks.{CowTable, PartitionTransform}
     val mfaWh = "/tmp/graft_scalebench_mfa"
     val mfaRoot = java.nio.file.Paths.get(mfaWh)
-    if (java.nio.file.Files.exists(mfaRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(mfaRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(mfaRoot)) graft.sinks.CowCatalog.deleteTree(mfaRoot)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$mfaWh/ns"))
     CowTable.create(spark.range(10000000L).select(col("id"),
         pmod(col("id"), lit(16L)).as("grp"),
@@ -1232,11 +1196,7 @@ object ScaleBench {
     import graft.sinks.CowTable
     val mftWh = "/tmp/graft_scalebench_mft"
     val mftRoot = java.nio.file.Paths.get(mftWh)
-    if (java.nio.file.Files.exists(mftRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(mftRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(mftRoot)) graft.sinks.CowCatalog.deleteTree(mftRoot)
     val mftT = s"$mftWh/ns/t"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$mftT/_snapshots"))
     val nFiles = 100000
@@ -1326,11 +1286,7 @@ object ScaleBench {
     import graft.sinks.{CowTable, PartitionTransform}
     val wrtWh = "/tmp/graft_scalebench_wrt"
     val wrtRoot = java.nio.file.Paths.get(wrtWh)
-    if (java.nio.file.Files.exists(wrtRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(wrtRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(wrtRoot)) graft.sinks.CowCatalog.deleteTree(wrtRoot)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$wrtWh/ns"))
     spark.conf.set("spark.sql.catalog.wrtcat", classOf[graft.sinks.CowCatalog].getName)
     spark.conf.set("spark.sql.catalog.wrtcat.root", wrtWh)
@@ -1386,11 +1342,7 @@ object ScaleBench {
     import graft.sinks.CowTable
     val zowWh = "/tmp/graft_scalebench_zow"
     val zowRoot = java.nio.file.Paths.get(zowWh)
-    if (java.nio.file.Files.exists(zowRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(zowRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(zowRoot)) graft.sinks.CowCatalog.deleteTree(zowRoot)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$zowWh/ns"))
     spark.conf.set("spark.sql.catalog.zowcat", classOf[graft.sinks.CowCatalog].getName)
     spark.conf.set("spark.sql.catalog.zowcat.root", zowWh)
@@ -1476,11 +1428,7 @@ object ScaleBench {
     import graft.sinks.CowTable
     val updWh = "/tmp/graft_scalebench_upd"
     val updRoot = java.nio.file.Paths.get(updWh)
-    if (java.nio.file.Files.exists(updRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(updRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(updRoot)) graft.sinks.CowCatalog.deleteTree(updRoot)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$updWh/ns"))
     CowTable.create(spark.range(10000000L).select(col("id"),
         pmod(xxhash64(col("id")), lit(1000L)).as("v"),
@@ -1544,11 +1492,7 @@ object ScaleBench {
     import graft.sinks.CowTable
     val lDir = "/tmp/graft_scalebench_lookup"
     val lRoot = java.nio.file.Paths.get(lDir)
-    if (java.nio.file.Files.exists(lRoot)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(lRoot).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    if (java.nio.file.Files.exists(lRoot)) graft.sinks.CowCatalog.deleteTree(lRoot)
     val plt = s"$lDir/fact"
     // 8M facts, 64 oid-range files; cust = hash(oid/10): 10 contiguous
     // oids share a cust, cust VALUES hash-scattered over 800k — per

@@ -73,7 +73,7 @@ object IncrementalDedup {
 
   private def writeIndexedVersion(indexPath: String, v: Int): Unit = {
     Files.createDirectories(Paths.get(indexPath))
-    val tmp = Paths.get(indexPath, s"._corpus_version.${System.nanoTime()}.tmp")
+    val tmp = Paths.get(indexPath, s"._corpus_version.${CowTable.freshName()}.tmp")
     Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, markerPath(indexPath),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)

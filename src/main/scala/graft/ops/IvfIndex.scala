@@ -323,7 +323,7 @@ object IvfIndex {
 
   private def writeIndexedVersion(indexPath: String, v: Int): Unit = {
     Files.createDirectories(Paths.get(indexPath))
-    val tmp = Paths.get(indexPath, s"._corpus_version.${System.nanoTime()}.tmp")
+    val tmp = Paths.get(indexPath, s"._corpus_version.${CowTable.freshName()}.tmp")
     Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, markerPath(indexPath),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
@@ -383,7 +383,7 @@ object IvfIndex {
         if (CowTable.exists(codebooksPath(indexPath)))
           CowTable.overwrite(spark, codebooksPath(indexPath), cbDf)
         else CowTable.create(cbDf.coalesce(1), codebooksPath(indexPath))
-        val cfgTmp = Paths.get(indexPath, s"._pq_config.${System.nanoTime()}.tmp")
+        val cfgTmp = Paths.get(indexPath, s"._pq_config.${CowTable.freshName()}.tmp")
         Files.createDirectories(Paths.get(indexPath))
         Files.write(cfgTmp, s"$pq $pqCodes".getBytes(StandardCharsets.UTF_8))
         Files.move(cfgTmp, pqConfigPath(indexPath),
@@ -441,7 +441,7 @@ object IvfIndex {
       dictMax = math.max(128, numCells))
     // the corpus path rides a marker so a probe on quantized lists can
     // exact-rerank from the corpus floats without the caller re-wiring
-    val tmp = Paths.get(indexPath, s"._corpus_path.${System.nanoTime()}.tmp")
+    val tmp = Paths.get(indexPath, s"._corpus_path.${CowTable.freshName()}.tmp")
     Files.write(tmp, corpusPath.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, corpusMarkerPath(indexPath),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)

@@ -564,9 +564,13 @@ object Scale {
     * list. All three joins shuffle on a node id; nothing is ever
     * collected or single-partitioned.
     *
-    * Input: any (src, dst) DataFrame (directed/multi edges fine —
-    * canonicalized + deduped here, self-loops dropped). Output: one
-    * row (n_triangles, n_edges, n_nodes).
+    * Input: a (src, dst) DataFrame of INTEGRAL node ids in
+    * [-2^31, 2^31) — the closure probe packs an id pair into one long,
+    * which is collision-free only in that range, so an id outside it
+    * fails the query (checked row by row in the first pass over the
+    * edges, before any key is packed — no extra job). Directed/multi edges are fine — canonicalized + deduped
+    * here, self-loops dropped. Output: one row (n_triangles, n_edges,
+    * n_nodes).
     */
   def triangleCount(rawEdges: DataFrame): DataFrame = {
     // materialized seams (r20): `und` feeds the degree aggregate, the
@@ -574,7 +578,12 @@ object Scale {
     // `oriented` feeds both wedge sides plus the closure probe (3
     // more) — un-checkpointed, the canonicalize-distinct shuffle and
     // the two degree joins replayed once per consumer
+    val inRange = (c: Column) =>
+      when(c < lit(Int.MinValue.toLong) || c > lit(Int.MaxValue.toLong),
+        raise_error(concat(lit("triangleCount: node ids must lie in [-2^31, 2^31), got "),
+          c.cast("string")))).otherwise(c)
     val und = rawEdges
+      .select(inRange(col("src")).as("src"), inRange(col("dst")).as("dst"))
       .select(least(col("src"), col("dst")).as("a"),
               greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
@@ -596,9 +605,9 @@ object Scale {
     val e2 = oriented.select(col("u"), col("v").as("v2"), col("dv").as("dv2"))
     // wedge endpoints packed into ONE long (r20 — the r19
     // graph_jaccard_neighbors rationale): the closure probe hashes one
-    // primitive key per candidate instead of a two-column row; node
-    // ids are non-negative and < 2^31, so v1·2^32 + v2 is
-    // collision-free and in-range
+    // primitive key per candidate instead of a two-column row; with
+    // ids in [-2^31, 2^31) (enforced on `und`) v1·2^32 + v2 is
+    // collision-free
     val wedges = e1.join(e2, "u")
       .filter(col("dv1") < col("dv2") ||
               (col("dv1") === col("dv2") && col("v1") < col("v2")))

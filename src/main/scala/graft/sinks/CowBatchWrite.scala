@@ -66,7 +66,7 @@ class CowBatchWrite(spark: SparkSession, path: String, writeSchema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     val spec = CowTable.partitionSpec(path)
-    val stampDir = s"$path/data/${System.nanoTime()}"
+    val stampDir = s"$path/data/${CowTable.freshName()}"
     // one parquet write config, prepared exactly as Spark's own parquet
     // sink prepares it (codec, schema, timestamp mode, committer conf)
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
@@ -143,7 +143,7 @@ class CowStreamingWrite(spark: SparkSession, path: String, writeSchema: StructTy
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     val spec = CowTable.partitionSpec(path)
-    val stampDir = s"$path/data/${System.nanoTime()}"
+    val stampDir = s"$path/data/${CowTable.freshName()}"
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val owf = ParquetUtils.prepareWrite(spark.sessionState.conf, job, writeSchema,
       new ParquetOptions(Map.empty[String, String], spark.sessionState.conf))

@@ -322,7 +322,7 @@ class CowCatalog extends TableCatalog with SupportsNamespaces with FunctionCatal
           (ident.namespace() :+ ident.name()).toSeq)
     }
     val stagedDir = (root +: ident.namespace().toSeq :+
-      s".stage-${ident.name()}-${System.nanoTime()}").mkString("/")
+      s".stage-${ident.name()}-${CowTable.freshName()}").mkString("/")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(stagedDir).getParent)
     CowCatalog.sweepOrphanedStages(
@@ -421,7 +421,7 @@ object CowCatalog {
     * before any deletion (an open Files.walk stream both holds a
     * directory fd and sees its own deletions).
     */
-  private[sinks] def deleteTree(d: java.nio.file.Path): Unit = {
+  private[graft] def deleteTree(d: java.nio.file.Path): Unit = {
     val paths = scala.util.Using.resource(java.nio.file.Files.walk(d)) { st =>
       st.sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.toVector
@@ -1155,39 +1155,29 @@ class CowScanBuilder(spark: SparkSession, path: String, asOf: Option[Int],
     */
   private var residuals: Array[Filter] = Array.empty
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val usable = filters.filter {
-      case EqualTo(_, null) => false
-      case _: EqualTo | _: In | _: GreaterThan | _: GreaterThanOrEqual |
-           _: LessThan | _: LessThanOrEqual => true
-      case _ => false
-    }
-    def hint(c: String) = tableSchema.fields.find(_.name == c).map(_.dataType)
-    def exact(c: String, vs: Seq[Any]): Option[Seq[String]] =
-      hint(c).flatMap(t =>
-        CowTable.exactConstantPrune(spark, path, c, vs, asOf, t))
+    // each usable filter in the stats gate's two shapes: IN values
+    // (Left) or an inclusive range (Right)
+    val shaped: Array[(Filter, String, Either[Seq[Any], (Option[Any], Option[Any])])] =
+      filters.collect {
+        case f @ EqualTo(c, v) if v != null => (f, c, Left(Seq(v)))
+        case f @ In(c, vs) => (f, c, Left(vs.toSeq))
+        case f @ GreaterThan(c, v) => (f, c, Right((Some(v), None)))
+        case f @ GreaterThanOrEqual(c, v) => (f, c, Right((Some(v), None)))
+        case f @ LessThan(c, v) => (f, c, Right((None, Some(v))))
+        case f @ LessThanOrEqual(c, v) => (f, c, Right((None, Some(v))))
+      }
+    val usable = shaped.map(_._1)
     val fullyPushed = scala.collection.mutable.Set.empty[Filter]
     val exactCols = scala.collection.mutable.Set.empty[String]
-    usable.foreach { f =>
-      val surviving: Set[String] = (f match {
-        case EqualTo(c, v) =>
-          exact(c, Seq(v)) match {
+    shaped.foreach { case (f, c, shape) =>
+      val hint = tableSchema.fields.find(_.name == c).map(_.dataType)
+      val surviving: Set[String] = (shape match {
+        case Left(vs) =>
+          hint.flatMap(CowTable.exactConstantPrune(spark, path, c, vs, asOf, _)) match {
             case Some(kept) => fullyPushed += f; exactCols += c; kept
-            case None => CowTable.prunedFilesIn(spark, path, c, Seq(v), asOf, hint(c))
+            case None => CowTable.prunedFilesIn(spark, path, c, vs, asOf, hint)
           }
-        case In(c, vs) =>
-          exact(c, vs.toSeq) match {
-            case Some(kept) => fullyPushed += f; exactCols += c; kept
-            case None => CowTable.prunedFilesIn(spark, path, c, vs.toSeq, asOf, hint(c))
-          }
-        case GreaterThan(c, v) =>
-          CowTable.prunedFilesRange(spark, path, c, Some(v), None, asOf, hint(c))
-        case GreaterThanOrEqual(c, v) =>
-          CowTable.prunedFilesRange(spark, path, c, Some(v), None, asOf, hint(c))
-        case LessThan(c, v) =>
-          CowTable.prunedFilesRange(spark, path, c, None, Some(v), asOf, hint(c))
-        case LessThanOrEqual(c, v) =>
-          CowTable.prunedFilesRange(spark, path, c, None, Some(v), asOf, hint(c))
-        case _ => files
+        case Right((lo, hi)) => CowTable.prunedFilesRange(spark, path, c, lo, hi, asOf, hint)
       }).toSet
       files = files.filter(surviving.contains)
     }

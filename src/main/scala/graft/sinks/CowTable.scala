@@ -25,15 +25,18 @@ import org.apache.spark.sql.types
   *    (copy-on-write): unmatched files carry over into the new
   *    manifest by reference. At 100 TB this is the property that makes
   *    an upsert proportional to the TOUCHED partitions, not the table.
-  *  - Commit = write `v{N+1}.json` to a temp name, then atomic rename;
-  *    old manifests stay — `read(asOf = n)` is time travel. The
-  *    single-writer assumption is documented (a real format arbitrates
-  *    the rename through a catalog/lock service; the COMMIT PROTOCOL —
-  *    immutable data + atomic manifest swap — is the same).
+  *  - Commit = write `v{N+1}.json` to a temp name, then publish it
+  *    exclusively through the [[CommitLockProvider]] (a hard link by
+  *    default, an external lease on object stores); old manifests stay
+  *    — `read(asOf = n)` is time travel. Concurrency is optimistic: the
+  *    loser of a publish race gets [[ConcurrentCommitException]], and
+  *    [[withCommitRetry]] recomputes it against the winner's snapshot.
   *
-  * File-level key pruning uses each file's min/max key footer stats via
-  * a per-file aggregate, so "files containing matched keys" is computed
-  * with one scan of the key columns, never a full-row read.
+  * `merge` finds the "files containing matched keys" with one scan of
+  * the key column (file name + key, joined to the update keys), never a
+  * full-row read. Reads prune files from the manifest alone: partition
+  * directories ([[prunedFilesEq]]) and per-file column stats plus
+  * lookup sidecars ([[prunedFilesRange]], [[prunedFilesIn]]).
   */
 object CowTable {
 
@@ -196,9 +199,17 @@ object CowTable {
       catch { case scala.util.control.NonFatal(_) => None }
   }
 
+  /** A fresh name for a temporary file or a write's data directory,
+    * unique across threads and JVMs. `System.nanoTime()` is not: it
+    * repeats across threads, and two writers that draw the same name
+    * share a tmp file (one deletes the other's) or collide on a data
+    * directory written with `SaveMode.ErrorIfExists`.
+    */
+  private[graft] def freshName(): String = java.util.UUID.randomUUID().toString
+
   private def writeLatestHint(path: String, v: Int): Unit = {
     val d = snapDir(path)
-    val tmp = d.resolve(s"._latest.${System.nanoTime()}.tmp")
+    val tmp = d.resolve(s"._latest.${freshName()}.tmp")
     Files.write(tmp, v.toString.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, d.resolve("_latest"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
@@ -541,10 +552,7 @@ object CowTable {
       rowCounts = ofLive(next.rowCounts, declared = true),
       lookups = ofLive(next.lookups, next.lookupSpec.nonEmpty),
       commitMs = Some(math.max(System.currentTimeMillis(), prevStamp + 1)))
-    // a name unique per attempt: System.nanoTime() repeats across
-    // threads, and two writers sharing one tmp file publish or delete
-    // each other's manifest
-    val tmp = d.resolve(s".v$v.${java.util.UUID.randomUUID()}.tmp")
+    val tmp = d.resolve(s".v$v.${freshName()}.tmp")
     Files.write(tmp, m.render.getBytes(StandardCharsets.UTF_8))
     // publication goes through the pluggable lock seam: hard link on
     // POSIX/HDFS-class stores, external-lease + plain PUT on S3-class
@@ -571,8 +579,7 @@ object CowTable {
     */
   private def writeData(df: DataFrame, path: String,
                         spec: Seq[PartitionTransform] = Seq.empty): Vector[String] = {
-    val stamp = s"${System.nanoTime()}"
-    val dir = Paths.get(path, "data", stamp)
+    val dir = Paths.get(path, "data", freshName())
     if (spec.isEmpty) df.write.mode(SaveMode.ErrorIfExists).parquet(dir.toString)
     else spec.foldLeft(df)((d, t) =>
       d.withColumn(t.name, t.exprOf(col(t.src), df.schema(t.src).dataType)))
@@ -825,9 +832,9 @@ object CowTable {
     *  - Filtered (`INSERT OVERWRITE … PARTITION (col=v, …)`): base data
     *    files whose directory segment for EVERY filtered transform
     *    equals the transform of the literal. The literal→segment
-    *    evaluation is [[prunedFilesEq]]'s own (cast to the source type,
-    *    same transform expression, same escaping), so the dropped set
-    *    is exactly the file set a read of that partition would serve.
+    *    rule is [[partitionSegment]], the one [[prunedFilesEq]] reads
+    *    by, so the dropped set is exactly the file set a read of that
+    *    partition would serve.
     * Partition replacement keeps positional sidecars (entries for
     * dropped files go inert with their file); C/R/B entries retire
     * with the dropped files in [[commit]].
@@ -875,21 +882,11 @@ object CowTable {
           require(canOverwriteByEquality(path, src),
             s"'$src' carries a pre-v2 time-transform spec — directories may be " +
               "session-zone-dependent; rewrite the table first")
-          val srcType: types.DataType =
-            m.schema.flatMap(_.fields.find(_.name == src).map(_.dataType))
-              .orElse(files.headOption.flatMap(f =>
-                scala.util.Try(spark.read.parquet(f).schema).toOption
-                  .flatMap(_.fields.find(_.name == src).map(_.dataType))))
-              .getOrElse(spark.range(1).select(lit(value)).schema.head.dataType)
-          val v = Option(value).map(_ =>
-            spark.range(1).select(t.exprOf(lit(value), srcType).cast("string"))
-              .head.getString(0))
-          val dirVal = v match {
-            case Some(s) if s != null =>
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(s)
-            case _ => "__HIVE_DEFAULT_PARTITION__"
-          }
-          (s"/${t.name}=$dirVal/", s"/${t.name}=")
+          // a null literal names the null directory without evaluating
+          // the transform
+          val seg = Option(value).flatMap(_ => partitionSegment(spark, t, m.schema, files, value))
+            .getOrElse(s"/${t.name}=__HIVE_DEFAULT_PARTITION__/")
+          (seg, s"/${t.name}=")
         }
         dropping("static partition overwrite",
           f => segs.exists { case (_, marker) => !f.contains(marker) },
@@ -905,9 +902,40 @@ object CowTable {
     * or duplicate rows rather than merely under-prune).
     */
   private[graft] def canOverwriteByEquality(path: String, src: String): Boolean =
-    partitionSpec(path, None).exists(t => t.src == src &&
-      (!Set("day", "month", "year").contains(t.kind) ||
-        partitionSpecVersion(path, None) >= PartitionTransform.SpecV))
+    partitionSpec(path, None).exists(t => t.src == src && !zoneDependent(path, t, None))
+
+  /** True iff `t` is a time transform under a PRE-VERSIONED spec line:
+    * its directories may have been written under a non-UTC session
+    * zone or with unpadded years, so a directory name recomputed from a
+    * literal may not exist — such a transform neither prunes a read
+    * (sound under-prune) nor selects files for an overwrite. Rewrite
+    * the table to re-enable both.
+    */
+  private def zoneDependent(path: String, t: PartitionTransform,
+                            asOf: Option[Int]): Boolean =
+    Set("day", "month", "year").contains(t.kind) &&
+      partitionSpecVersion(path, asOf) < PartitionTransform.SpecV
+
+  /** The directory segment `/<t.name>=<v>/` that holds the rows whose
+    * source column equals `value`, or None when the transform of the
+    * literal is null. The literal is cast to the source column's type
+    * ([[columnType]]) so cross-family literals canonicalize to the
+    * writer's directory string, the transform is evaluated exactly as
+    * the writer does (one 1-row local projection), and the value is
+    * escaped the way Spark's partitioned writer escapes directory names
+    * — a mismatch would WRONGLY prune, not just under-prune. The read
+    * pruner ([[prunedFilesEq]]) and the partition overwrite
+    * ([[replacedBy]]) share it, so an overwrite drops exactly the files
+    * a read of that partition serves.
+    */
+  private def partitionSegment(spark: SparkSession, t: PartitionTransform,
+                               schema: Option[types.StructType], files: Seq[String],
+                               value: Any): Option[String] = {
+    val srcType = columnType(spark, schema, files, Seq(t.src), Some(value)).get
+    Option(spark.range(1).select(t.exprOf(lit(value), srcType).cast("string"))
+      .head.getString(0)).map(v => s"/${t.name}=" +
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v) + "/")
+  }
 
   /** Publish a STAGED table (atomic CTAS / RTAS — see
     * [[CowCatalog.stageCreate]]) into `realPath`: the staged table's
@@ -926,7 +954,7 @@ object CowTable {
   private[sinks] def publishStaged(spark: SparkSession, stagedPath: String,
                                    realPath: String): Int = {
     val stagedData = Paths.get(stagedPath, "data")
-    val destRoot = Paths.get(realPath, "data", s"staged${System.nanoTime()}")
+    val destRoot = Paths.get(realPath, "data", s"staged${freshName()}")
     val linked = scala.collection.mutable.Map.empty[String, String]
     def relocate(f: String): String = linked.getOrElseUpdate(f, {
       val p = Paths.get(f)
@@ -1041,41 +1069,13 @@ object CowTable {
   def prunedFilesEq(spark: SparkSession, path: String, src: String, value: Any,
                     asOf: Option[Int] = None): Seq[String] = {
     val files = snapshotFiles(path, asOf)
-    partitionSpec(path, asOf).find(_.src == src) match {
+    // a pre-v2 time transform, or a literal whose transform is null
+    // (null never equals; the residual filter decides), keeps every file
+    partitionSpec(path, asOf).find(_.src == src).filterNot(zoneDependent(path, _, asOf))
+      .flatMap(t => partitionSegment(spark, t, declaredSchema(path, asOf), files, value)
+        .map(seg => (seg, s"/${t.name}="))) match {
+      case Some((seg, marker)) => files.filter(f => f.contains(seg) || !f.contains(marker))
       case None => files
-      // a PRE-VERSIONED spec line's time-transform directories may
-      // have been written under a non-UTC session zone or unpadded
-      // years — the new expression can compute a directory name that
-      // doesn't exist and WRONGLY prune; read everything instead
-      // (sound under-prune; rewrite the table to re-enable)
-      case Some(t) if Set("day", "month", "year").contains(t.kind) &&
-          partitionSpecVersion(path, asOf) < PartitionTransform.SpecV => files
-      case Some(t) =>
-        // evaluate the transform of the literal exactly as the writer
-        // did (one 1-row local projection), and escape the value the
-        // way Spark's partitioned writer escapes directory names —
-        // a mismatch here would WRONGLY prune, not just under-prune.
-        // The literal is first cast to the SOURCE column's type
-        // (declared schema, else a data-file footer, else the
-        // literal's own type) so cross-family literals canonicalize
-        // to the writer's directory string.
-        val srcType: types.DataType =
-          declaredSchema(path, asOf)
-            .flatMap(_.fields.find(_.name == src).map(_.dataType))
-            .orElse(files.headOption.flatMap(f =>
-              scala.util.Try(spark.read.parquet(f).schema).toOption
-                .flatMap(_.fields.find(_.name == src).map(_.dataType))))
-            .getOrElse(spark.range(1).select(lit(value)).schema.head.dataType)
-        val v = spark.range(1).select(t.exprOf(lit(value), srcType).cast("string"))
-          .head.getString(0)
-        if (v == null) files // null never equals; residual filter decides
-        else {
-          val seg = s"/${t.name}=" +
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .escapePathName(v) + "/"
-          val marker = s"/${t.name}="
-          files.filter(f => f.contains(seg) || !f.contains(marker))
-        }
     }
   }
 
@@ -1751,123 +1751,133 @@ object CowTable {
       f.name +: was
     }.getOrElse(Seq(column))
 
-  private def statsColType(spark: SparkSession, path: String, column: String,
-                           names: Seq[String], files: Seq[String],
-                           asOf: Option[Int]): Option[types.DataType] =
-    declaredSchema(path, asOf)
-      .flatMap(_.fields.find(_.name == column).map(_.dataType))
+  /** A column's type: the declared schema, else the first data file's
+    * footer (under any of `names`, the column's rename lineage), else
+    * `literal`'s own type. The one rule behind the stats gate, the
+    * partition pruner and the partition overwrite.
+    */
+  private def columnType(spark: SparkSession, schema: Option[types.StructType],
+                         files: Seq[String], names: Seq[String],
+                         literal: Option[Any] = None): Option[types.DataType] =
+    schema.flatMap(_.fields.find(_.name == names.head).map(_.dataType))
       .orElse(files.headOption.flatMap(f =>
         scala.util.Try(spark.read.parquet(f).schema).toOption.flatMap(s =>
           names.collectFirst {
             case n if s.fieldNames.contains(n) => s(n).dataType
           })))
+      .orElse(literal.map(v => spark.range(1).select(lit(v)).schema.head.dataType))
 
-  /** Files of a snapshot that CAN contain rows with `column` in
-    * [lo, hi] (inclusive; None = unbounded): a file is skipped only
-    * when its recorded [min, max] provably excludes the whole range.
-    * Files without stats — written before the declaration, a column
-    * with no entry, an uncomparable marker (NaN) — always survive:
-    * over-approximate, never wrong. MoR-deleted rows only WIDEN
-    * bounds, same direction. Column resolves through rename lineage;
-    * literals canonicalize to the column's type first.
+  /** Requested intervals of one column (inclusive, None = unbounded
+    * side; an IN value v is [v, v]), canonicalized ONCE under the
+    * column's type. `big` is the numeric domain — None when some bound
+    * has no numeric form (NaN, unparseable), which keeps every file.
+    * `str` is UTF-8 order, where a non-string bound is unbounded: a
+    * cross-typed literal (numeric vs string column) matches through the
+    * residual's implicit numeric cast ("30" < "5" lexicographically),
+    * so it cannot prune on that side.
     */
-  def prunedFilesRange(spark: SparkSession, path: String, column: String,
-                       lo: Option[Any], hi: Option[Any],
-                       asOf: Option[Int] = None): Seq[String] =
-    prunedFilesRange(spark, path, column, lo, hi, asOf, None)
+  private final case class Probe(big: Option[Seq[(Option[BigDecimal], Option[BigDecimal])]],
+                                 str: Seq[(Option[String], Option[String])]) {
+    /** The IN values in each domain; None when one has no form there. */
+    def bigPoints: Option[Seq[BigDecimal]] = big.map(_.flatMap(_._1))
+    def strPoints: Option[Seq[String]] =
+      if (str.forall(_._1.isDefined)) Some(str.flatMap(_._1)) else None
+  }
 
-  /** [[prunedFilesRange]] with the column type supplied by a caller
-    * that already knows the table schema (the catalog scan) — skips
-    * the footer-sampling `statsColType` fallback, a fresh
-    * DataFrameReader per call (the same fixed overhead the r16 `dpp`
-    * bench measured on the IN path).
+  private def probeOf(ivs: Seq[(Option[Any], Option[Any])],
+                      t: Option[types.DataType]): Probe = {
+    val big = ivs.map { case (l, h) => (l.map(litBig(_, t)), h.map(litBig(_, t))) }
+    def str(b: Option[Any]) = b.collect { case s: String => s }
+    Probe(
+      if (big.exists { case (l, h) => l.exists(_.isEmpty) || h.exists(_.isEmpty) }) None
+      else Some(big.map { case (l, h) => (l.flatten, h.flatten) }),
+      ivs.map { case (l, h) => (str(l), str(h)) })
+  }
+
+  /** A probe's intervals in one domain, sorted so both bounds ascend
+    * (IN points, or a single range): "does any requested interval meet
+    * the file's [a, b]?" is then one binary search — runtime join
+    * filters (SupportsRuntimeV2Filtering) routinely carry 10k+ keys,
+    * where a per-(file, value) scan was a measurable driver stall (r16
+    * `dpp` bench). A fully unbounded interval meets every file.
     */
-  def prunedFilesRange(spark: SparkSession, path: String, column: String,
-                       lo: Option[Any], hi: Option[Any],
-                       asOf: Option[Int],
-                       colTypeHint: Option[types.DataType]): Seq[String] = {
-    val files = snapshotFiles(path, asOf)
-    if (lo.isEmpty && hi.isEmpty) return files
-    val stats = fileDigests(path, asOf)
-    if (stats.isEmpty) return files
-    val names = physicalNamesOf(path, column, asOf)
-    val colType = colTypeHint.orElse(
-      statsColType(spark, path, column, names, files, asOf))
-    val isString = colType.contains(types.StringType) ||
-      (colType.isEmpty && lo.orElse(hi).exists(_.isInstanceOf[String]))
-    // literal canonicalization hoisted out of the per-file loop (it was
-    // re-run per file — O(files) BigDecimal churn per plan)
-    val loB = lo.map(litBig(_, colType))
-    val hiB = hi.map(litBig(_, colType))
-    // FAST PATH (round 17): a range-clustered column (pairwise-disjoint
-    // per-file intervals) answers from the sorted range index in
-    // O(log files); identical keep/skip decisions to the loop below.
-    if (!isString && names.length == 1 &&
-        loB.forall(_.isDefined) && hiB.forall(_.isDefined)) {
-      snapshotMeta(path, asOf).rangeIndexFor(names.head) match {
-        case Some(idx) => return idx.overlapping(loB.flatten, hiB.flatten)
-        case None =>
+  private final class Spans[T](ivs: Seq[(Option[T], Option[T])], cmp: (T, T) => Int) {
+    private val all = ivs.exists { case (l, h) => l.isEmpty && h.isEmpty }
+    private val sorted =
+      if (all || ivs.length < 2) ivs.toArray
+      else ivs.sortWith((x, y) => cmp(x._1.get, y._1.get) < 0).toArray
+    def meets(a: T, b: T): Boolean = all || {
+      // first interval whose upper bound reaches a; it meets [a, b]
+      // iff its lower bound is <= b
+      var l = 0; var r = sorted.length
+      while (l < r) {
+        val m = (l + r) >>> 1
+        if (sorted(m)._2.exists(cmp(_, a) < 0)) l = m + 1 else r = m
       }
-    }
-    files.filter { f =>
-      stats.get(f).flatMap(m => names.collectFirst {
-        case n if m.contains(n) => m(n)
-      }) match {
-        case None => true // no stats for this file/column: must read
-        case Some(d) if d.allNull => false // zero non-null rows
-        case Some(d) if isString =>
-          (d.loS, d.hiS) match {
-            case (Some(a), Some(b)) =>
-              // only a STRING literal compares the way the stats were
-              // recorded (UTF-8 bytes); a cross-typed literal (numeric
-              // vs string column) compares NUMERICALLY in the residual
-              // filter after Spark's implicit cast ("30" < "5" lexic.)
-              // — it cannot prune, so it keeps the file
-              lo.forall { case l: String => utf8Cmp(b, l) >= 0; case _ => true } &&
-                hi.forall { case h: String => utf8Cmp(a, h) <= 0; case _ => true }
-            case _ => true
-          }
-        case Some(d) =>
-          (d.loB, d.hiB, loB, hiB) match {
-            // an uncanonicalizable literal (NaN, unparseable) or stats
-            // marker keeps every file — conservative by construction
-            case (Some(a), Some(b), lB, hB)
-              if lB.forall(_.isDefined) && hB.forall(_.isDefined) =>
-              lB.flatten.forall(l => b >= l) && hB.flatten.forall(h => a <= h)
-            case _ => true
-          }
-      }
+      l < sorted.length && sorted(l)._1.forall(cmp(_, b) <= 0)
     }
   }
 
-  /** Files that can contain rows with `column` IN `values` (nulls in
-    * `values` ignored — IN never matches null). Empty/all-null value
-    * sets match nothing.
+  /** The files a constant-value index places at the probe's IN values,
+    * value-major; None when some value has no form in the column's
+    * domain.
     */
-  def prunedFilesIn(spark: SparkSession, path: String, column: String,
-                    values: Seq[Any], asOf: Option[Int] = None): Seq[String] =
-    prunedFilesIn(spark, path, column, values, asOf, None)
+  private def constHits(idx: ConstIndex, isString: Boolean, p: Probe): Option[Seq[String]] =
+    if (isString) p.strPoints.map(_.distinct.flatMap(idx.byStr.getOrElse(_, Vector.empty)))
+    else p.bigPoints.map(_.distinct.flatMap(idx.byBig.getOrElse(_, Vector.empty)))
 
-  /** [[prunedFilesIn]] with the column's type supplied by a caller that
-    * already knows the table schema (the catalog scan) — skips the
-    * footer-sampling `statsColType` fallback, which costs a fresh
-    * DataFrameReader per call and was the measured fixed overhead of
-    * the runtime-filter path (r16 `dpp` bench).
+  /** THE file-pruning stats gate behind [[prunedFilesRange]] and
+    * [[prunedFilesIn]]: the files of a snapshot that CAN hold a row
+    * with `column` in one of `ivs`. A file is skipped only when it is
+    * all-null in the column or its recorded [min, max] provably misses
+    * every interval. Files without stats — written before the
+    * declaration, a column with no entry, an uncomparable marker (NaN)
+    * — always survive: over-approximate, never wrong. MoR-deleted rows
+    * only WIDEN bounds, same direction. Column resolves through rename
+    * lineage; literals canonicalize to the column's type first (the
+    * declared schema, else a footer, unless the caller supplies it as
+    * `colTypeHint`). `points` marks an IN request, the only one the
+    * dict/bloom lookup sidecars and the constant-value index answer.
     */
-  def prunedFilesIn(spark: SparkSession, path: String, column: String,
-                    values: Seq[Any], asOf: Option[Int],
-                    colTypeHint: Option[types.DataType]): Seq[String] = {
-    val vs = values.filter(_ != null)
-    if (vs.isEmpty) return Seq.empty
+  private def statsGate(spark: SparkSession, path: String, column: String,
+                        ivs: Seq[(Option[Any], Option[Any])], points: Boolean,
+                        asOf: Option[Int],
+                        colTypeHint: Option[types.DataType]): Seq[String] = {
     val files = snapshotFiles(path, asOf)
     val stats = fileDigests(path, asOf)
-    val lookups = fileLookups(path, asOf)
+    val lookups =
+      if (points) fileLookups(path, asOf) else Map.empty[String, Map[String, LookupEntry]]
     if (stats.isEmpty && lookups.isEmpty) return files
     val names = physicalNamesOf(path, column, asOf)
     val colType = colTypeHint.orElse(
-      statsColType(spark, path, column, names, files, asOf))
+      columnType(spark, declaredSchema(path, asOf), files, names))
     val isString = colType.contains(types.StringType) ||
-      (colType.isEmpty && vs.head.isInstanceOf[String])
+      (colType.isEmpty && ivs.head._1.orElse(ivs.head._2).exists(_.isInstanceOf[String]))
+    val probe = probeOf(ivs, colType)
+    // FAST PATHS (round 17), single physical name only (under rename
+    // lineage stats may sit under old names per file). A fully
+    // constant-or-all-null column answers IN from its value index in
+    // O(values) — exact, so the lookup gate has nothing left to prune.
+    // A range-clustered column (pairwise-disjoint per-file intervals)
+    // answers from the sorted range index in O(log files) with the
+    // loop's own keep/skip decisions — but not beside lookup sidecars,
+    // which can prune INSIDE a kept interval. An untyped IN request
+    // keeps the loop's snapshot order.
+    if (names.length == 1 && (colType.isDefined || !points)) {
+      val meta = snapshotMeta(path, asOf)
+      if (points) meta.constIndexFor(names.head).flatMap(constHits(_, isString, probe)) match {
+        case Some(kept) => return kept
+        case None =>
+      }
+      if (!isString && lookups.isEmpty) (probe.big, meta.rangeIndexFor(names.head)) match {
+        case (Some(bigs), Some(idx)) =>
+          // one window is duplicate-free; several repeat the always-keep files
+          val windows = bigs.distinct
+          val hits = windows.flatMap { case (l, h) => idx.overlapping(l, h) }
+          return if (windows.length > 1) hits.distinct else hits
+        case _ =>
+      }
+    }
     // dictionary/bloom gate (the point-lookup path): a file is skipped
     // when NO requested key can be present. Keys canonicalize under
     // the column's KEY type (array columns index their elements); any
@@ -1878,110 +1888,62 @@ object CowTable {
         case types.ArrayType(el, _) => el
         case t => t
       }.flatMap { kt =>
-        val ks = vs.map(lookupKey(_, kt))
+        val ks = ivs.flatMap(_._1).map(lookupKey(_, kt))
         if (ks.exists(_.isEmpty)) None else Some(ks.flatten)
       }
-    def lookupGate(f: String): Boolean = lookupKeys match {
-      case None => true
-      case Some(keys) =>
-        lookups.get(f).flatMap(m => names.collectFirst {
-          case n if m.contains(n) => m(n)
-        }) match {
-          case None => true // no sidecar for this file/column: must read
-          case Some(e) => keys.exists(mayContain(e, _))
-        }
-    }
-    if (stats.isEmpty) return files.filter(lookupGate)
-    // FAST PATH (round 17): a fully constant-or-all-null column answers
-    // IN-pruning from the per-column value index in O(values) — exact,
-    // not conservative, so the lookup gate has nothing left to prune.
-    // Cross-typed / uncanonicalizable values fall through (the loop
-    // keeps their files conservatively, as before). names.length != 1
-    // (rename lineage) also falls through — stats may sit under old
-    // physical names per file.
-    if (colType.isDefined && names.length == 1) {
-      snapshotMeta(path, asOf).constIndexFor(names.head) match {
-        case Some(idx) if isString && vs.forall(_.isInstanceOf[String]) =>
-          return vs.map(_.asInstanceOf[String]).distinct
-            .flatMap(v => idx.byStr.getOrElse(v, Vector.empty))
-        case Some(idx) if !isString =>
-          val bigs = vs.map(v => litBig(v, colType))
-          if (!bigs.exists(_.isEmpty))
-            return bigs.flatten.distinct
-              .flatMap(v => idx.byBig.getOrElse(v, Vector.empty))
-        case _ =>
-      }
-      // not constant-per-file, but possibly RANGE-CLUSTERED: answer
-      // each point from the disjoint-interval index in O(log files).
-      // Only when the table carries no lookup sidecars — a dict/bloom
-      // can prune INSIDE a kept interval, and skipping it here would
-      // silently trade their IO win for planner speed
-      if (!isString && lookups.isEmpty) {
-        val bigs = vs.map(v => litBig(v, colType))
-        if (!bigs.exists(_.isEmpty)) {
-          snapshotMeta(path, asOf).rangeIndexFor(names.head) match {
-            case Some(idx) =>
-              return bigs.flatten.distinct
-                .flatMap(v => idx.overlapping(Some(v), Some(v)))
-                .distinct
-            case None =>
-          }
-        }
-      }
-    }
-    // canonicalize the requested values ONCE and sort, so the per-file
-    // range gate is a binary search instead of an O(|values|) scan with
-    // per-(file, value) re-canonicalization — runtime join filters
-    // (SupportsRuntimeV2Filtering) routinely carry 10k+ keys, which
-    // made the old shape a measurable driver stall (r16 `dpp` bench).
-    // None = some value has no canonical form under the column type →
-    // that value could match anywhere → the gate keeps every file,
-    // exactly the old exists-with-None semantics.
-    val sortedBigs: Option[Array[BigDecimal]] = {
-      val bs = vs.map(v => litBig(v, colType))
-      if (bs.exists(_.isEmpty)) None else Some(bs.flatten.sorted.toArray)
-    }
-    val sortedStrs: Option[Array[String]] = {
-      // a cross-typed value matches via the residual's implicit numeric
-      // cast, not UTF-8 order — it keeps the file (see prunedFilesRange)
-      if (vs.exists(!_.isInstanceOf[String])) None
-      else Some(vs.map(_.asInstanceOf[String]).toArray
-        .sortWith(utf8Cmp(_, _) < 0))
-    }
-    def anyIn[T](arr: Array[T], lo: T, hi: T, cmp: (T, T) => Int): Boolean = {
-      // first index with arr(i) >= lo, then check <= hi
-      var l = 0; var r = arr.length
-      while (l < r) {
-        val m = (l + r) >>> 1
-        if (cmp(arr(m), lo) < 0) l = m + 1 else r = m
-      }
-      l < arr.length && cmp(arr(l), hi) <= 0
-    }
+    val bigSpans = probe.big.map(new Spans[BigDecimal](_, _.compare(_)))
+    val strSpans = new Spans[String](probe.str, utf8Cmp)
     // singleton-name fast lookup: the per-file collectFirst closure was
     // measurable at 100k files (mft probe); lineage (>1 name) keeps it
     val n0 = names.head
     val single = names.length == 1
-    files.filter(lookupGate).filter { f =>
-      (stats.get(f) match {
-        case Some(m) if single => m.get(n0)
-        case Some(m) => names.collectFirst { case n if m.contains(n) => m(n) }
-        case None => None
-      }) match {
-        case None => true
-        case Some(d) if d.allNull => false
-        case Some(d) if isString =>
-          (d.loS, d.hiS) match {
-            case (Some(a), Some(b)) => sortedStrs.forall(anyIn(_, a, b, utf8Cmp))
+    def entry[E](m: Map[String, E]): Option[E] =
+      if (single) m.get(n0) else names.collectFirst { case n if m.contains(n) => m(n) }
+    files.filter { f =>
+      // no sidecar for this file/column: must read
+      lookupKeys.forall(keys =>
+        lookups.get(f).flatMap(entry).forall(e => keys.exists(mayContain(e, _)))) &&
+        (stats.get(f).flatMap(entry) match {
+          case None => true // no stats for this file/column: must read
+          case Some(d) if d.allNull => false // zero non-null rows
+          case Some(d) if isString => (d.loS, d.hiS) match {
+            case (Some(a), Some(b)) => strSpans.meets(a, b)
             case _ => true
           }
-        case Some(d) =>
-          (d.loB, d.hiB) match {
-            case (Some(a), Some(b)) =>
-              sortedBigs.forall(anyIn[BigDecimal](_, a, b, _.compare(_)))
+          case Some(d) => (d.loB, d.hiB) match {
+            case (Some(a), Some(b)) => bigSpans.forall(_.meets(a, b))
             case _ => true
           }
-      }
+        })
     }
+  }
+
+  /** Files of a snapshot that CAN contain rows with `column` in
+    * [lo, hi] (inclusive; None = unbounded) — see [[statsGate]]. A
+    * caller that already knows the table schema (the catalog scan)
+    * passes `colTypeHint`, skipping the footer-sampling type fallback
+    * (a fresh DataFrameReader per call).
+    */
+  def prunedFilesRange(spark: SparkSession, path: String, column: String,
+                       lo: Option[Any], hi: Option[Any],
+                       asOf: Option[Int] = None,
+                       colTypeHint: Option[types.DataType] = None): Seq[String] =
+    if (lo.isEmpty && hi.isEmpty) snapshotFiles(path, asOf)
+    else statsGate(spark, path, column, Seq((lo, hi)), points = false, asOf, colTypeHint)
+
+  /** Files that can contain rows with `column` IN `values` (nulls in
+    * `values` ignored — IN never matches null; empty/all-null value
+    * sets match nothing) — see [[statsGate]]; `colTypeHint` as in
+    * [[prunedFilesRange]] (the footer fallback was the measured fixed
+    * overhead of the runtime-filter path, r16 `dpp` bench).
+    */
+  def prunedFilesIn(spark: SparkSession, path: String, column: String,
+                    values: Seq[Any], asOf: Option[Int] = None,
+                    colTypeHint: Option[types.DataType] = None): Seq[String] = {
+    val vs = values.filter(_ != null)
+    if (vs.isEmpty) Seq.empty
+    else statsGate(spark, path, column, vs.map(v => (Some(v), Some(v))), points = true,
+      asOf, colTypeHint)
   }
 
   /** EXACT partition-equality certificate: `Some(keptFiles)` when the
@@ -2011,15 +1973,10 @@ object CowTable {
     // require the simple single-name world
     if (names.length != 1) return None
     val isString = colType == types.StringType
-    val wantBig: Option[Seq[BigDecimal]] =
-      if (isString) None
-      else { val bs = values.map(litBig(_, Some(colType)))
-             if (bs.exists(_.isEmpty)) return None else Some(bs.flatten) }
-    val wantStr: Option[Seq[String]] =
-      if (!isString) None
-      else if (values.forall(_.isInstanceOf[String]))
-        Some(values.map(_.asInstanceOf[String]))
-      else return None
+    val probe = probeOf(values.map(v => (Some(v), Some(v))), Some(colType))
+    if ((if (isString) probe.strPoints else probe.bigPoints).isEmpty) return None
+    val wantBig = probe.bigPoints.getOrElse(Seq.empty)
+    val wantStr = probe.strPoints.getOrElse(Seq.empty)
     // FAST PATH (round 17): on a fully constant-or-all-null layout the
     // per-column value index answers in O(values) — every non-matching
     // file is constant at a DIFFERENT value or all-null, i.e. provably
@@ -2027,12 +1984,7 @@ object CowTable {
     // is value-major (deterministic); the scan builder re-imposes
     // snapshot order via its own files.filter.
     snapshotMeta(path, asOf).constIndexFor(names.head) match {
-      case Some(idx) =>
-        return Some(
-          if (isString) wantStr.get.distinct.flatMap(v =>
-            idx.byStr.getOrElse(v, Vector.empty))
-          else wantBig.get.distinct.flatMap(v =>
-            idx.byBig.getOrElse(v, Vector.empty)))
+      case Some(idx) => return constHits(idx, isString, probe)
       case None => // mixed layout: the exact per-file loop below may
                    // still certify via range disjointness
     }
@@ -2045,21 +1997,21 @@ object CowTable {
           if (d.nn == 0L) () // all-null file: no value matches — exclude
           else if (isString) (d.loS, d.hiS) match {
             case (Some(a), Some(b)) =>
-              if (a == b && wantStr.get.contains(a)) {
+              if (a == b && wantStr.contains(a)) {
                 if (d.nn != rows) return None // constant but null-bearing
                 kept += f
               } else if (a == b) () // constant at a non-requested value
-              else if (wantStr.get.forall(s =>
+              else if (wantStr.forall(s =>
                 utf8Cmp(s, a) < 0 || utf8Cmp(s, b) > 0)) () // disjoint
               else return None // a value inside a non-constant range
             case _ => return None
           } else (d.loB, d.hiB) match {
             case (Some(a), Some(b)) =>
-              if (a == b && wantBig.get.contains(a)) {
+              if (a == b && wantBig.contains(a)) {
                 if (d.nn != rows) return None
                 kept += f
               } else if (a == b) ()
-              else if (wantBig.get.forall(x => x < a || x > b)) ()
+              else if (wantBig.forall(x => x < a || x > b)) ()
               else return None
             case _ => return None // NaN marker / corrupt: not provable
           }
@@ -2436,9 +2388,9 @@ object CowTable {
   }
 
   /** MERGE (upsert): rows in `updates` replace current rows with the
-    * same `key`; unmatched update rows insert. Only data files whose
-    * [min, max] key range intersects the update keys are rewritten —
-    * every other file carries over by reference.
+    * same `key`; unmatched update rows insert. Only the data files that
+    * contain a matched key are rewritten — every other file carries
+    * over by reference.
     */
   def merge(spark: SparkSession, path: String, updates: DataFrame, key: String): Int = {
     val base = currentVersion(path)
@@ -3453,7 +3405,7 @@ object CowTable {
         s"publish conflict: $path advanced v$fork -> v$cur since branch " +
           s"'$name' forked; re-branch and replay the branch's changes")
     val parentData = Paths.get(path, "data").toString + "/"
-    val relocDir = Paths.get(path, "data", s"publish-$name-${System.nanoTime()}")
+    val relocDir = Paths.get(path, "data", s"publish-$name-${freshName()}")
     // Positional sidecars address rows by data-file PATH; relocating a
     // branch-written data file would orphan its position entries
     // (silent row resurrection). Key sidecars and positions on
@@ -3498,9 +3450,7 @@ object CowTable {
     */
   def dropBranch(path: String, name: String): Unit = {
     val bp = Paths.get(branchPath(path, name))
-    if (Files.exists(bp))
-      scala.util.Using.resource(Files.walk(bp))(_.iterator().asScala.toList)
-        .reverse.foreach(Files.delete)
+    if (Files.exists(bp)) CowCatalog.deleteTree(bp)
   }
 
   // input_file_name() returns a file URI; manifests store plain paths

@@ -238,12 +238,7 @@ class CowChangesMicroBatchStream(spark: SparkSession, val path: String,
           }
         }.toVector
       }
-      done.foreach(d => scala.util.Try {
-        val paths = scala.util.Using.resource(java.nio.file.Files.walk(d)) { st =>
-          st.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.toVector
-        }
-        paths.foreach(java.nio.file.Files.deleteIfExists(_))
-      })
+      done.foreach(d => scala.util.Try(graft.sinks.CowCatalog.deleteTree(d)))
     }
   }
 

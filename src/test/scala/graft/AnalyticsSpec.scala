@@ -290,6 +290,20 @@ class AnalyticsSpec extends SparkSpecBase {
       org.apache.spark.sql.Row(0L, 4L, 4L))
   }
 
+  test("triangleCount rejects node ids outside [-2^31, 2^31) instead of packing them") {
+    import spark.implicits._
+    val tri = Seq((1L, 2L), (2L, 3L), (1L, 3L))
+    assert(graft.ops.Scale.triangleCount(tri.toDF("src", "dst")).collect().head ==
+      org.apache.spark.sql.Row(1L, 3L, 3L))
+    assert(graft.ops.Scale.triangleCount((tri :+ ((-2147483648L, 1L))).toDF("src", "dst"))
+      .collect().head.getLong(0) == 1L, "-2^31 is in range")
+    Seq(2147483648L, -2147483649L).foreach { bad =>
+      val e = intercept[Exception](graft.ops.Scale.triangleCount(
+        (tri :+ ((bad, 1L))).toDF("src", "dst")).collect())
+      assert(e.getMessage.contains("node ids must lie in [-2^31, 2^31)"), e.getMessage)
+    }
+  }
+
   test("join_scd2_pointintime: every purchase matches exactly its own version") {
     import org.apache.spark.sql.functions._
     val rows = q("join_scd2_pointintime").collect()

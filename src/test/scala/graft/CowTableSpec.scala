@@ -3698,4 +3698,26 @@ class CowTableSpec extends SparkSpecBase {
       SparkSession.setActiveSession(prev)
     }
   }
+
+  test("parallel appends draw distinct data directories: 4 threads x 25 appends all land") {
+    import spark.implicits._
+    val path = tmp
+    CowTable.create(Seq((-1L, -1)).toDF("id", "w"), path)
+    val baseDirs = CowTable.snapshotFiles(path).map(java.nio.file.Paths.get(_).getParent).toSet
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val fs = (0 until 4).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (0 until 25).foreach { i =>
+            CowTable.append(spark, path, Seq((w * 100L + i, w)).toDF("id", "w"), maxRetries = 100)
+          }
+        })
+      }
+      fs.foreach(_.get(600, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+    val now = CowTable.read(spark, path)
+    assert(now.count() == 101L && now.select("id").distinct().count() == 101L)
+    val dirs = CowTable.snapshotFiles(path).map(java.nio.file.Paths.get(_).getParent).toSet -- baseDirs
+    assert(dirs.size == 100, s"one fresh data directory per append, got ${dirs.size}")
+  }
 }
