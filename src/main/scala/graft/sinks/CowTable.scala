@@ -882,9 +882,10 @@ object CowTable {
           require(canOverwriteByEquality(path, src),
             s"'$src' carries a pre-v2 time-transform spec — directories may be " +
               "session-zone-dependent; rewrite the table first")
-          // a null literal names the null directory without evaluating
-          // the transform
-          val seg = Option(value).flatMap(_ => partitionSegment(spark, t, m.schema, files, value))
+          // the writer's rule for null too: a bucket puts null rows in
+          // the bucket of hash(null); only a transform that yields null
+          // (identity, time, truncate) lands in the default directory
+          val seg = partitionSegment(spark, t, m.schema, files, value)
             .getOrElse(s"/${t.name}=__HIVE_DEFAULT_PARTITION__/")
           (seg, s"/${t.name}=")
         }
@@ -2054,22 +2055,48 @@ object CowTable {
   def read(spark: SparkSession, path: String, asOf: Option[Int] = None): DataFrame =
     readFiles(spark, path, snapshotFiles(path, asOf), asOf)
 
-  /** [[read]] restricted to a subset of the snapshot's data files —
-    * the building block partition pruning ([[readPrunedEq]]) and the
-    * internal rewrite paths share. All of the snapshot's delete
-    * sidecars and its declared schema still apply.
+  /** Which delete sidecars a [[readFiles]] scan applies. Positional
+    * `pos` ranges drop their rows or, with `keepPos`, keep ONLY their
+    * rows (the preimages [[changes]] and [[dirtyGroupsOf]] extract);
+    * key-delete rows `keys` anti-join or, with `keepKeys`, semi-join.
+    * `Sidecars()` applies none: every physical row (the touched-file
+    * probe of [[rewriteTouched]]).
+    */
+  private[graft] final case class Sidecars(pos: Seq[String] = Nil, keepPos: Boolean = false,
+                                           keys: Option[DataFrame] = None,
+                                           keepKeys: Boolean = false)
+
+  /** THE read of snapshot data files: [[read]] restricted to `files`,
+    * and the one scan every internal path shares — partition pruning
+    * ([[readPrunedEq]]), the copy-on-write probe and rewrite of
+    * [[merge]]/[[delete]]/[[update]], the merge-on-read writes, the
+    * change feed and the IVM dirty-group discovery. It holds the one
+    * read rule: an EVOLVED table (one with a [[declaredSchema]] at
+    * `asOf`) reads with an explicit schema, so files from before and
+    * after a widen read together; otherwise the files' schemas merge.
+    * Callers choose the file set, the schema version (`asOf`), which
+    * sidecars apply (`sidecars`; None = the snapshot's own at `asOf`,
+    * as [[read]]) and whether each row carries its physical address
+    * (`addressed`: `__file` = `_metadata.file_path`, `__pos` = row
+    * ordinal).
     */
   private[graft] def readFiles(spark: SparkSession, path: String,
                                files: Seq[String],
-                               asOf: Option[Int] = None): DataFrame = {
-    if (files.isEmpty)
+                               asOf: Option[Int] = None,
+                               sidecars: Option[Sidecars] = None,
+                               addressed: Boolean = false): DataFrame = {
+    val schema = declaredSchema(path, asOf)
+    val addr = if (addressed) Seq("__file", "__pos") else Seq.empty
+    if (files.isEmpty) {
       // a zero-data-file snapshot ([[createEmpty]], or everything
       // deleted by rewrite): the declared schema is the only shape
-      return declaredSchema(path, asOf).map(s =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
-        .getOrElse(throw new IllegalStateException(
-          s"snapshot of $path has no data files and no declared schema"))
+      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        schema.getOrElse(throw new IllegalStateException(
+          s"snapshot of $path has no data files and no declared schema")))
+      return if (!addressed) empty
+        else empty.withColumn("__file", lit(null).cast("string"))
+          .withColumn("__pos", lit(null).cast("long"))
+    }
     // An EVOLVED snapshot reads with an EXPLICIT schema — declared
     // fields plus each field's rename-lineage names, all at the
     // DECLARED type (parquet readers upcast a widened column's old
@@ -2078,7 +2105,7 @@ object CowTable {
     // (CANNOT_MERGE_SCHEMAS on any post-widen append), and would
     // also open every footer — O(files) at 100 TB. Non-evolved
     // snapshots keep the merge (no declared shape to trust).
-    val raw = declaredSchema(path, asOf) match {
+    val raw0 = schema match {
       case Some(ds) =>
         val readFields = ds.fields.flatMap { f =>
           val was =
@@ -2089,86 +2116,89 @@ object CowTable {
         spark.read.schema(types.StructType(readFields)).parquet(files: _*)
       case None => spark.read.option("mergeSchema", "true").parquet(files: _*)
     }
-    val pos = applyPosDeletes(spark, raw, snapshotPositionDeletes(path, asOf))
-    val projected = declaredSchema(path, asOf).fold(pos)(projectDeclared(pos, _))
-    applyKeyDeletes(spark, projected, snapshotDeletes(path, asOf))
+    val raw = if (!addressed) raw0
+      else raw0.withColumn("__file", col("_metadata.file_path"))
+        .withColumn("__pos", col("_metadata.row_index"))
+    val sc = sidecars.getOrElse(Sidecars(snapshotPositionDeletes(path, asOf),
+      keys = keyRows(spark, snapshotDeletes(path, asOf))))
+    val pos = applyPosDeletes(spark, raw, sc.pos, sc.keepPos)
+    val projected = schema.fold(pos)(projectDeclared(pos, _, keep = addr))
+    sc.keys.fold(projected)(applyKeyDeletes(projected, _, sc.keepKeys))
   }
 
-  /** Anti-join `data` against the union of key-delete sidecars, joined
-    * on the sidecar's own column names (composite keys join on all of
-    * them). Sidecars are key lists bounded by the compaction cadence —
-    * size-based estimation broadcasts them; not forced, so a
-    * pathological backlog degrades to a shuffle join, never an OOM.
-    * A sidecar column missing from the data schema fails loudly
-    * (ADVICE r10): the one legitimate way to hit it is renaming the
-    * delete-key column before folding the sidecars — [[compact]]
-    * first.
+  /** The distinct key rows of key-delete sidecar files; None when there
+    * are none. No mergeSchema: every sidecar of a table carries the
+    * SAME column set ([[deleteMor]] contract, enforced at commit) — a
+    * mismatch should fail loudly, not widen.
     */
-  private def applyKeyDeletes(spark: SparkSession, data: DataFrame,
-                              dels: Seq[String]): DataFrame = {
-    if (dels.isEmpty) return data
-    // no mergeSchema: every sidecar of a table carries the SAME column
-    // set ([[deleteMor]] contract, enforced at commit) — a mismatch
-    // should fail loudly, not widen
-    val dk = spark.read.parquet(dels: _*).distinct()
+  private def keyRows(spark: SparkSession, dels: Seq[String]): Option[DataFrame] =
+    Option.when(dels.nonEmpty)(spark.read.parquet(dels: _*).distinct())
+
+  /** Anti-join `data` against key-delete rows `dk` — or, with `keep`,
+    * semi-join (the preimages of newly deleted keys) — on the sidecar's
+    * OWN column names (composite keys join on all of them; never a
+    * caller's key, which need not be the delete key). Sidecars are key
+    * lists bounded by the compaction cadence — size-based estimation
+    * broadcasts them; not forced, so a pathological backlog degrades
+    * to a shuffle join, never an OOM. A small single-column semi-join
+    * set (≤ `literalMax` non-null keys) becomes a LITERAL In, which
+    * reaches the parquet footers and prunes files a key-clustered
+    * layout never touches. A sidecar column missing from the data
+    * schema fails loudly (ADVICE r10): the one legitimate way to hit it
+    * is renaming the delete-key column before folding the sidecars —
+    * [[compact]] first.
+    */
+  private def applyKeyDeletes(data: DataFrame, dk: DataFrame, keep: Boolean = false,
+                              literalMax: Int = 1024): DataFrame = {
     val kcols = dk.columns.toSeq
     val missing = kcols.filterNot(data.columns.contains)
     require(missing.isEmpty,
       s"delete-sidecar key column(s) ${missing.mkString(", ")} not in the " +
         s"table's read schema ${data.columns.mkString("[", ", ", "]")} — " +
         "fold sidecars (compact) before renaming/dropping a delete-key column")
+    if (keep && kcols.size == 1) {
+      val keys = dk.limit(literalMax + 1).collect().map(_.get(0))
+      if (keys.length <= literalMax && !keys.contains(null))
+        return data.filter(col(kcols.head).isin(keys.toIndexedSeq: _*))
+    }
     val renamed = kcols.foldLeft(dk)((d, c) => d.withColumnRenamed(c, s"__del_$c"))
-    data.join(renamed,
-      kcols.map(c => col(c) === col(s"__del_$c")).reduce(_ && _), "left_anti")
+    data.join(renamed, kcols.map(c => col(c) === col(s"__del_$c")).reduce(_ && _),
+      if (keep) "left_semi" else "left_anti")
   }
 
   /** Filter out rows whose (file, row-ordinal) lands in a positional
-    * sidecar range. One broadcast of the per-file range lists (bounded
-    * by file-count × run-count — the sidecar design bound) + a codegen
-    * `exists` filter; rows from files with no ranges stream through the
+    * sidecar range — or, with `keep`, keep only those rows. One
+    * broadcast of the per-file range lists (bounded by file-count ×
+    * run-count — the sidecar design bound) + a codegen `exists` filter;
+    * when dropping, rows from files with no ranges stream through the
     * left join untouched.
     */
   private def applyPosDeletes(spark: SparkSession, data: DataFrame,
-                              pos: Seq[String]): DataFrame = {
-    if (pos.isEmpty) return data
+                              pos: Seq[String], keep: Boolean = false): DataFrame = {
+    if (pos.isEmpty) return if (keep) data.limit(0) else data
     // internal names are `__pd_`-prefixed so they can never collide
-    // with the caller's own `__file`/`__pos` bookkeeping (readWithPos)
+    // with an addressed scan's own `__file`/`__pos`
     val ranges = spark.read.parquet(pos: _*)
       .groupBy(col("__file").as("__pd_file"))
       .agg(collect_list(struct(col("__lo"), col("__hi"))).as("__pd_ranges"))
+    val hit = org.apache.spark.sql.functions.exists(col("__pd_ranges"),
+      r => col("__pd_ri") >= r.getField("__lo") && col("__pd_ri") <= r.getField("__hi"))
     data
       .withColumn("__pd_fp", col("_metadata.file_path"))
       .withColumn("__pd_ri", col("_metadata.row_index"))
-      .join(broadcast(ranges), col("__pd_fp") === col("__pd_file"), "left_outer")
-      .filter(col("__pd_ranges").isNull || !org.apache.spark.sql.functions.exists(col("__pd_ranges"),
-        r => col("__pd_ri") >= r.getField("__lo") && col("__pd_ri") <= r.getField("__hi")))
+      .join(broadcast(ranges), col("__pd_fp") === col("__pd_file"),
+        if (keep) "inner" else "left_outer")
+      .filter(if (keep) hit else col("__pd_ranges").isNull || !hit)
       .drop("__pd_fp", "__pd_ri", "__pd_file", "__pd_ranges")
   }
 
-  /** Keep rows whose (file, row-ordinal) IS in a sidecar range — the
-    * preimage extraction [[changes]] uses for carried files.
-    */
-  private def keepPosDeleted(spark: SparkSession, data: DataFrame,
-                             pos: Seq[String]): DataFrame = {
-    val ranges = spark.read.parquet(pos: _*)
-      .groupBy(col("__file").as("__pd_file"))
-      .agg(collect_list(struct(col("__lo"), col("__hi"))).as("__pd_ranges"))
-    data
-      .withColumn("__pd_fp", col("_metadata.file_path"))
-      .withColumn("__pd_ri", col("_metadata.row_index"))
-      .join(broadcast(ranges), col("__pd_fp") === col("__pd_file"), "inner")
-      .filter(org.apache.spark.sql.functions.exists(col("__pd_ranges"),
-        r => col("__pd_ri") >= r.getField("__lo") && col("__pd_ri") <= r.getField("__hi")))
-      .drop("__pd_fp", "__pd_ri", "__pd_file", "__pd_ranges")
-  }
-
-  /** Project a (schema-merged) frame through the declared schema: each
+  /** Project a raw [[readFiles]] frame through the declared schema: each
     * declared column resolves per row through its rename lineage
     * (coalesce over whichever physical names are present, newest
     * first), cast to the declared type (type widening). Physical
     * columns outside the declared set (dropped, or renamed-away names)
-    * disappear; `keep` columns (internal bookkeeping like
-    * `input_file_name`) survive the projection.
+    * disappear; `keep` columns (an addressed scan's `__file`/`__pos`)
+    * survive the projection.
     */
   private def projectDeclared(df: DataFrame, schema: types.StructType,
                               keep: Seq[String] = Seq.empty): DataFrame = {
@@ -2264,7 +2294,8 @@ object CowTable {
     */
   def deleteMorWhere(spark: SparkSession, path: String, predicate: String): Int = {
     val base = currentVersion(path)
-    val matched = readWithPos(spark, path, Some(base))
+    val matched = readFiles(spark, path, snapshotFiles(path, Some(base)), Some(base),
+        addressed = true)
       .filter(coalesce(expr(predicate), lit(false)))
       .select(col("__file"), col("__pos"))
     commitPosRanges(spark, path, matched, base)
@@ -2283,7 +2314,8 @@ object CowTable {
     */
   def deleteMorPosKeys(spark: SparkSession, path: String, keys: DataFrame): Int = {
     val base = currentVersion(path)
-    val matched = readWithPos(spark, path, Some(base))
+    val matched = readFiles(spark, path, snapshotFiles(path, Some(base)), Some(base),
+        addressed = true)
       .join(broadcast(keys), keys.columns.toSeq, "left_semi")
       .select(col("__file"), col("__pos"))
     commitPosRanges(spark, path, matched, base)
@@ -2317,7 +2349,8 @@ object CowTable {
       // positions recompute against each attempt's base: a concurrent
       // compact/cluster relocates rows, so the run ranges must be the
       // winner-snapshot's (withCommitRetry's serializable contract)
-      val sidecar = writePosRanges(path, readWithPos(spark, path, Some(base))
+      val sidecar = writePosRanges(path, readFiles(spark, path,
+          snapshotFiles(path, Some(base)), Some(base), addressed = true)
         .join(broadcast(keys), keys.columns.toSeq, "left_semi")
         .select(col("__file"), col("__pos")))
       Option.when(sidecar.nonEmpty || fresh.dataFiles.nonEmpty || txn.nonEmpty)(
@@ -2351,24 +2384,6 @@ object CowTable {
     writeData(ranges.coalesce(1), path)
   }
 
-  /** The logical snapshot with each row's physical address attached
-    * (`__file` = `_metadata.file_path`, `__pos` = row ordinal) — what
-    * [[deleteMorWhere]] filters. Key sidecars apply after projection
-    * as in [[read]], so the positions of already-deleted rows never
-    * re-commit.
-    */
-  private def readWithPos(spark: SparkSession, path: String,
-                          asOf: Option[Int]): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(snapshotFiles(path, asOf): _*)
-      .withColumn("__file", col("_metadata.file_path"))
-      .withColumn("__pos", col("_metadata.row_index"))
-    val pos = applyPosDeletes(spark, raw, snapshotPositionDeletes(path, asOf))
-    val projected = declaredSchema(path, asOf)
-      .fold(pos)(projectDeclared(pos, _, keep = Seq("__file", "__pos")))
-    applyKeyDeletes(spark, projected, snapshotDeletes(path, asOf))
-  }
-
   private def commitDeleteKeys(path: String, matched: DataFrame, base: Int): Int = {
     if (matched.isEmpty) return base
     // sidecar key contract: every key sidecar of a table carries the
@@ -2389,46 +2404,33 @@ object CowTable {
 
   /** MERGE (upsert): rows in `updates` replace current rows with the
     * same `key`; unmatched update rows insert. Only the data files that
-    * contain a matched key are rewritten — every other file carries
-    * over by reference.
+    * contain a matched key are rewritten ([[rewriteTouched]]) — every
+    * other file carries over by reference. The probe and the rewrite
+    * read through [[readFiles]], so a widened table (files from before
+    * and after a [[widenColumn]]) merges like any other.
     */
   def merge(spark: SparkSession, path: String, updates: DataFrame, key: String): Int = {
     val base = currentVersion(path)
-    val current = snapshotFiles(path, Some(base))
-    val schema = declaredSchema(path, Some(base))
-    val posDels = snapshotPositionDeletes(path, Some(base))
+    // update rows take the declared column types, as update's
+    // assignments do: a column written wider than declared (bigint
+    // rows into an int column) would break the declared-schema read
+    val rows = declaredSchema(path, Some(base)).fold(updates) { s =>
+      val declared = s.fields.map(f => f.name -> f.dataType).toMap
+      updates.select(updates.columns.toIndexedSeq.map(c =>
+        declared.get(c).fold(col(c))(t => col(c).cast(t).as(c))): _*)
+    }
     // one key-column scan finds the files that contain matched keys —
     // the column-pruned generator analogue of footer-stat pruning.
     // The scan projects through the declared schema (rename lineage)
     // so `key` always means the DECLARED key column, whichever
     // physical name a file carries.
-    val keys = updates.select(col(key)).distinct()
-    val rawKeyed = spark.read.option("mergeSchema", "true").parquet(current: _*)
-      .withColumn("__f", input_file_name())
-    val keyed = schema.fold(rawKeyed)(projectDeclared(rawKeyed, _, keep = Seq("__f")))
-    val touched = keyed
-      .select(col("__f").as("f"), col(key))
-      .join(broadcast(keys), key).select("f").distinct()
-      .collect().map(_.getString(0)).toSet
-    val isTouched = (f: String) => touched.exists(t => samePath(f, t))
-    val untouched = current.filterNot(isTouched)
-    val toRewrite = current.filter(isTouched)
-    val pspec = partitionSpec(path, Some(base))
-    val rewritten =
-      if (toRewrite.isEmpty) writeDataWithStats(updates, path, pspec) // pure insert
-      else {
-        // mergeSchema: a touched set mixing pre- and post-evolution
-        // files must not drop the added column from survivor rows.
-        // Positionally-deleted rows are filtered BEFORE the rewrite —
-        // reading them raw would resurrect them in the new file (its
-        // fresh path makes the old range entries inert).
-        val rawTouched = spark.read.option("mergeSchema", "true").parquet(toRewrite: _*)
-        val logical0 = applyPosDeletes(spark, rawTouched, posDels)
-        val logical = schema.fold(logical0)(projectDeclared(logical0, _))
-        writeDataWithStats(logical
-          .join(broadcast(keys), Seq(key), "left_anti") // survivors
-          .unionByName(updates, allowMissingColumns = true), path, pspec)
-      }
+    val keys = rows.select(col(key)).distinct()
+    val m = rewriteTouched(spark, path, base)(
+      _.select(col("__file"), col(key)).join(broadcast(keys), key))(
+      _.join(broadcast(keys), Seq(key), "left_anti") // survivors
+        .unionByName(rows, allowMissingColumns = true))
+      .getOrElse(manifest(path, Some(base)).withFiles( // pure insert
+        writeDataWithStats(rows, path, partitionSpec(path, Some(base)))))
     // Merge-on-read key sidecars: an upserted key is LIVE again, so it
     // must leave the delete set (the update's row would otherwise
     // vanish at read). Surviving entries consolidate into one fresh
@@ -2437,7 +2439,6 @@ object CowTable {
     // age. Sidecars keyed on something OTHER than the merge key
     // (composite-key deletes) carry over untouched: their deletes are
     // not addressed by this merge's key, so no un-delete applies.
-    val m = manifest(path, Some(base))
     val sidecars = m.keyDeletes
     val keyDels =
       if (sidecars.isEmpty) sidecars
@@ -2448,11 +2449,36 @@ object CowTable {
         if (remaining.isEmpty) Vector.empty
         else writeData(remaining.coalesce(1), path)
       }
-    // Positional sidecars carry over: entries for carried files stay
-    // live; entries for rewritten files point at paths no longer in
-    // the manifest and are inert (compact retires them).
-    commit(path, m.copy(dataFiles = untouched.toVector, keyDeletes = keyDels)
-      .withFiles(rewritten), base)
+    commit(path, m.copy(keyDeletes = keyDels), base)
+  }
+
+  /** THE copy-on-write rewrite [[merge]], [[delete]] and [[update]]
+    * share. A RAW probe of the snapshot at `base` — declared names,
+    * each row's `__file` attached, no sidecars (an already-deleted row
+    * may over-flag a file: an extra rewrite, never a wrong result) —
+    * hands `touches` the rows to test; the files its rows live in are
+    * re-read as LOGICAL rows w.r.t. positional sidecars (a raw read
+    * would resurrect positionally-deleted rows in the new file, whose
+    * fresh path old range entries can't address), passed through
+    * `rewrite` and written with stats. Key sidecars carry over in the
+    * manifest instead, and so do positional entries: live for carried
+    * files, inert for rewritten ones (their path left the manifest).
+    * Returns the base manifest with the touched files replaced, or
+    * None when no file was touched.
+    */
+  private def rewriteTouched(spark: SparkSession, path: String, base: Int)(
+      touches: DataFrame => DataFrame)(rewrite: DataFrame => DataFrame): Option[Manifest] = {
+    val current = snapshotFiles(path, Some(base))
+    val touched = touches(readFiles(spark, path, current, Some(base), Some(Sidecars()),
+        addressed = true))
+      .select("__file").distinct().collect().map(_.getString(0)).toSet
+    val (toRewrite, untouched) = current.partition(f => touched.exists(t => samePath(f, t)))
+    Option.when(toRewrite.nonEmpty) {
+      val logical = readFiles(spark, path, toRewrite, Some(base),
+        Some(Sidecars(snapshotPositionDeletes(path, Some(base)))))
+      manifest(path, Some(base)).copy(dataFiles = untouched.toVector).withFiles(
+        writeDataWithStats(rewrite(logical), path, partitionSpec(path, Some(base))))
+    }
   }
 
   /** Implicit SCHEMA WIDENING: `merge` accepts updates with ADDED
@@ -2743,39 +2769,20 @@ object CowTable {
     val newPos = snapshotPositionDeletes(path, Some(toV))
       .diff(snapshotPositionDeletes(path, Some(fromV)))
     if (delta.isEmpty && newSidecars.isEmpty && newPos.isEmpty) return None
-    val toSchema = declaredSchema(path, Some(toV))
-    def projected(df: DataFrame): DataFrame = toSchema.fold(df)(projectDeclared(df, _))
-    val fileDirty = if (delta.isEmpty) None else Some(
-      projected(spark.read.option("mergeSchema", "true").parquet(delta: _*))
-        .select(col(groupCol).as("__dirty_g")).distinct())
-    val delDirty = if (newSidecars.isEmpty) None else {
-      val dk = spark.read.parquet(newSidecars: _*).distinct()
-      val kcols = dk.columns.toSeq
-      val fromRows = read(spark, path, Some(fromV))
-      val matched =
-        if (kcols.size == 1) {
-          val k = kcols.head
-          // small delete sets become a literal In for the same
-          // footer-pruning reason as the dirty-key recompute below
-          val keys = dk.limit(dirtyLiteralMax + 1).collect().map(_.get(0))
-          if (keys.length <= dirtyLiteralMax && !keys.contains(null))
-            fromRows.filter(col(k).isin(keys.toIndexedSeq: _*))
-          else fromRows.join(dk.withColumnRenamed(k, "__del_k"),
-            col(k) === col("__del_k"), "left_semi")
-        } else {
-          val renamed = kcols.foldLeft(dk)((d, c) => d.withColumnRenamed(c, s"__del_$c"))
-          fromRows.join(renamed,
-            kcols.map(c => col(c) === col(s"__del_$c")).reduce(_ && _), "left_semi")
-        }
-      Some(matched.select(col(groupCol).as("__dirty_g")).distinct())
-    }
+    // the file delta and the positional preimages read through toV's
+    // declared schema
+    def groups(df: DataFrame): DataFrame = df.select(col(groupCol).as("__dirty_g")).distinct()
+    val fileDirty = Option.when(delta.nonEmpty)(
+      groups(readFiles(spark, path, delta, Some(toV), Some(Sidecars()))))
+    // small delete sets become a literal In ([[applyKeyDeletes]]) for
+    // the same footer-pruning reason as the dirty-key recompute below
+    val delDirty = keyRows(spark, newSidecars).map(dk =>
+      groups(applyKeyDeletes(read(spark, path, Some(fromV)), dk, keep = true,
+        literalMax = dirtyLiteralMax)))
     // positional sidecar diff: the deleted rows live in files that
     // never moved — address them by (file, ordinal) against fromV
-    val posDirty = if (newPos.isEmpty) None else {
-      val rawFrom = spark.read.option("mergeSchema", "true").parquet(fromFiles: _*)
-      Some(projected(keepPosDeleted(spark, rawFrom, newPos))
-        .select(col(groupCol).as("__dirty_g")).distinct())
-    }
+    val posDirty = Option.when(newPos.nonEmpty)(groups(readFiles(spark, path, fromFiles,
+      Some(toV), Some(Sidecars(newPos, keepPos = true)))))
     Some(Seq(fileDirty, delDirty, posDirty).flatten
       .reduce(_ unionByName _).distinct())
   }
@@ -2980,60 +2987,36 @@ object CowTable {
   }
 
   /** DELETE rows matching `predicate`: rewrite only files containing
-    * matches; the rest carry over. SQL DELETE semantics: a row is
-    * deleted only where the predicate is TRUE — rows where it
-    * evaluates NULL are KEPT, on both the touched-file scan and the
-    * survivor rewrite (the same three-valued coalesce on both sides,
-    * so the result is independent of which file a row happens to
-    * live in).
+    * matches ([[rewriteTouched]]); the rest carry over. SQL DELETE
+    * semantics: a row is deleted only where the predicate is TRUE —
+    * rows where it evaluates NULL are KEPT, on both the touched-file
+    * probe and the survivor rewrite (the same three-valued coalesce on
+    * both sides, so the result is independent of which file a row
+    * happens to live in). Both read through [[readFiles]], so widened
+    * tables delete like any other. MoR key sidecars carry over
+    * untouched: a sidecar-deleted row stays deleted whether or not its
+    * physical row also matched here. Commits a version even when
+    * nothing matches.
     */
   def delete(spark: SparkSession, path: String, predicate: String): Int = {
     val base = currentVersion(path)
-    val current = snapshotFiles(path, Some(base))
-    val schema = declaredSchema(path, Some(base))
-    val posDels = snapshotPositionDeletes(path, Some(base))
     val deleteCond = coalesce(expr(predicate), lit(false))
-    // touched-file detection on the projected raw rows (predicate
-    // names declared columns); already-deleted rows may over-flag a
-    // file — an extra rewrite, never a wrong result
-    val raw0 = spark.read.option("mergeSchema", "true").parquet(current: _*)
-      .withColumn("__f", input_file_name())
-    val probe = schema.fold(raw0)(projectDeclared(raw0, _, keep = Seq("__f")))
-    val touched = probe.filter(deleteCond)
-      .select(col("__f").as("f")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val untouched = current.filterNot(f => touched.exists(t => samePath(f, t)))
-    val toRewrite = current.filter(f => touched.exists(t => samePath(f, t)))
-    val fresh =
-      if (toRewrite.isEmpty) Manifest()
-      else {
-        // rewrite from the LOGICAL rows w.r.t. positional sidecars: a
-        // raw read would resurrect positionally-deleted rows in the new
-        // file (whose fresh path old range entries can't address)
-        val rawT = spark.read.option("mergeSchema", "true").parquet(toRewrite: _*)
-        val logical0 = applyPosDeletes(spark, rawT, posDels)
-        val logical = schema.fold(logical0)(projectDeclared(logical0, _))
-        writeDataWithStats(logical.filter(not(deleteCond)), path,
-          partitionSpec(path, Some(base)))
-      }
-    // MoR key sidecars carry over untouched: a sidecar-deleted row
-    // stays deleted whether or not its physical row also matched here.
-    // Positional entries for carried files stay live; entries for
-    // rewritten files are inert (path left the manifest).
-    commit(path, manifest(path, Some(base)).copy(dataFiles = untouched.toVector)
-      .withFiles(fresh), base)
+    commit(path, rewriteTouched(spark, path, base)(_.filter(deleteCond))(
+      _.filter(not(deleteCond))).getOrElse(manifest(path, Some(base))), base)
   }
 
   /** UPDATE rows matching `predicate`: apply `sets` (column → new
     * value, evaluated against the OLD row — all assignments are
     * simultaneous, so `SET a = b, b = a` swaps) and rewrite only the
-    * files containing matches; every other file carries over by
-    * reference, so the write cost is proportional to the TOUCHED data,
-    * not the table. SQL UPDATE semantics throughout: a row changes
-    * only where the predicate is TRUE (NULL keeps the row unchanged —
-    * the same three-valued coalesce on the touched-file probe and the
-    * rewrite, so the result is independent of file placement), and
-    * each assignment casts back to the column's declared type.
+    * files containing matches ([[rewriteTouched]]); every other file
+    * carries over by reference, so the write cost is proportional to
+    * the TOUCHED data, not the table. SQL UPDATE semantics throughout:
+    * a row changes only where the predicate is TRUE (NULL keeps the row
+    * unchanged — the same three-valued coalesce on the touched-file
+    * probe and the rewrite, so the result is independent of file
+    * placement), and each assignment casts back to the column's
+    * declared type. Both read through [[readFiles]], so widened tables
+    * update like any other.
     *
     * MoR interaction: positional sidecars are honored on the rewrite
     * (delete()'s discipline — carried files keep their entries live,
@@ -3054,9 +3037,6 @@ object CowTable {
       "UPDATE SET assigns a column twice: " +
         sets.map(_._1).diff(sets.map(_._1).distinct).mkString(", "))
     val base = currentVersion(path)
-    val current = snapshotFiles(path, Some(base))
-    val schema = declaredSchema(path, Some(base))
-    val posDels = snapshotPositionDeletes(path, Some(base))
     val keyDels = snapshotDeletes(path, Some(base))
     if (keyDels.nonEmpty) {
       val sidecarCols = spark.read.parquet(keyDels.head).columns.toSet
@@ -3068,35 +3048,23 @@ object CowTable {
           "ones; fold the sidecars (compact) first")
     }
     val updateCond = coalesce(predicate, lit(false))
-    val raw0 = spark.read.option("mergeSchema", "true").parquet(current: _*)
-      .withColumn("__f", input_file_name())
-    val probe = schema.fold(raw0)(projectDeclared(raw0, _, keep = Seq("__f")))
-    val missing = sets.map(_._1).filterNot(n => probe.columns.contains(n))
-    require(missing.isEmpty,
-      s"UPDATE SET on unknown column(s) ${missing.mkString(", ")} — table " +
-        s"columns are ${probe.columns.filterNot(_ == "__f").mkString("[", ", ", "]")}")
-    val touched = probe.filter(updateCond)
-      .select(col("__f").as("f")).distinct()
-      .collect().map(_.getString(0)).toSet
-    if (touched.isEmpty) return base
-    val untouched = current.filterNot(f => touched.exists(t => samePath(f, t)))
-    val toRewrite = current.filter(f => touched.exists(t => samePath(f, t)))
-    // rewrite from the LOGICAL rows w.r.t. positional sidecars (same
-    // reason as delete(): a raw read would resurrect positionally-
-    // deleted rows into the new file)
-    val rawT = spark.read.option("mergeSchema", "true").parquet(toRewrite: _*)
-    val logical0 = applyPosDeletes(spark, rawT, posDels)
-    val logical = schema.fold(logical0)(projectDeclared(logical0, _))
     val byName = sets.toMap
-    val out = logical.select(logical.schema.fields.map { f =>
-      byName.get(f.name) match {
-        case Some(v) =>
-          when(updateCond, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }.toIndexedSeq: _*)
-    commit(path, manifest(path, Some(base)).copy(dataFiles = untouched.toVector)
-      .withFiles(writeDataWithStats(out, path, partitionSpec(path, Some(base)))), base)
+    rewriteTouched(spark, path, base) { probe =>
+      val cols = probe.columns.filterNot(Set("__file", "__pos"))
+      val missing = sets.map(_._1).filterNot(cols.contains)
+      require(missing.isEmpty,
+        s"UPDATE SET on unknown column(s) ${missing.mkString(", ")} — table " +
+          s"columns are ${cols.mkString("[", ", ", "]")}")
+      probe.filter(updateCond)
+    } { logical =>
+      logical.select(logical.schema.fields.map { f =>
+        byName.get(f.name) match {
+          case Some(v) =>
+            when(updateCond, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+          case None => col(f.name)
+        }
+      }.toIndexedSeq: _*)
+    }.fold(base)(commit(path, _, base))
   }
 
   /** String-expression convenience for [[update]] (the API twin of
@@ -3131,15 +3099,6 @@ object CowTable {
     val removed = fromFiles.filterNot(toFiles.contains)
     val added = toFiles.filterNot(fromFiles.contains)
     val carried = fromFiles.filter(toFiles.contains)
-    // the feed presents every row through toV's DECLARED schema, so a
-    // CDC consumer sees one column set across an evolution commit
-    // (renames resolve through lineage, drops vanish, adds are null on
-    // preimages)
-    val toSchema = declaredSchema(path, Some(toV))
-    def projected(df: DataFrame): DataFrame = toSchema.fold(df)(projectDeclared(df, _))
-    def rd(fs: Seq[String]): Option[DataFrame] =
-      if (fs.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(fs: _*))
     // Merge-on-read sidecars: each side of the compare must see the
     // LOGICAL rows of its version. The preimage side drops rows already
     // deleted at fromV and ADDS the carried-file rows whose keys (or
@@ -3148,67 +3107,37 @@ object CowTable {
     // alone would miss them); the postimage side drops rows deleted at
     // toV. A key reinserted after a MoR delete then classifies as
     // `insert` (its preimage wasn't visible at fromV) — the
-    // semantically right call.
-    def delKeys(fs: Seq[String]): Option[DataFrame] =
-      if (fs.isEmpty) None else Some(spark.read.parquet(fs: _*).distinct())
-    val fromDel = delKeys(snapshotDeletes(path, Some(fromV)))
-    val toDel = delKeys(snapshotDeletes(path, Some(toV)))
+    // semantically right call. Key sidecars join on their OWN column
+    // names, never the caller's `key` ([[applyKeyDeletes]]).
+    val fromDel = keyRows(spark, snapshotDeletes(path, Some(fromV)))
+    val toDel = keyRows(spark, snapshotDeletes(path, Some(toV)))
     val newDel = (fromDel, toDel) match {
       case (_, None)          => None
       case (None, Some(t))    => Some(t)
       case (Some(f), Some(t)) => Some(t.except(f))
     }
-    // join on the SIDECAR'S OWN column names (composite keys on all of
-    // them) — never the caller's `key`, which classifies the feed but
-    // need not be the delete key (ADVICE r10: a mismatched caller key
-    // silently anti-joined unrelated values)
-    def applyDel(df: DataFrame, del: Option[DataFrame], anti: Boolean): DataFrame =
-      del match {
-        case None => df
-        case Some(dk) =>
-          val kcols = dk.columns.toSeq
-          val missing = kcols.filterNot(df.columns.contains)
-          require(missing.isEmpty,
-            s"delete-sidecar key column(s) ${missing.mkString(", ")} not in " +
-              s"the change-feed schema ${df.columns.mkString("[", ", ", "]")}")
-          val renamed = kcols.foldLeft(dk)((d, c) => d.withColumnRenamed(c, s"__del_$c"))
-          df.join(renamed,
-            kcols.map(c => col(c) === col(s"__del_$c")).reduce(_ && _),
-            if (anti) "left_anti" else "left_semi")
-      }
     val fromPos = snapshotPositionDeletes(path, Some(fromV))
     val toPos = snapshotPositionDeletes(path, Some(toV))
     val newPos = toPos.diff(fromPos)
+    // every side reads through toV's DECLARED schema, so a CDC consumer
+    // sees one column set across an evolution commit (renames resolve
+    // through lineage, drops vanish, adds are null on preimages)
+    def scan(fs: Seq[String], sc: Sidecars): Option[DataFrame] =
+      Option.when(fs.nonEmpty)(readFiles(spark, path, fs, Some(toV), Some(sc)))
     // The carried-file preimage scan is the one piece not bounded by
     // the manifest diff (deleteMor's whole point is that the files
     // never moved) — so, exactly like incrementalAgg's dirty keys,
-    // small single-column delete sets become a LITERAL In predicate
-    // that reaches the parquet footers and prunes carried files a
-    // key-clustered layout never touches; composite keys (and a
-    // pathological backlog) pay the semi-join scan of the carried
-    // files' key columns only.
-    val carriedKeyDeleted = newDel.flatMap { dk =>
-      rd(carried).map { c0 =>
-        val c = projected(applyPosDeletes(spark, c0, fromPos))
-        val kcols = dk.columns.toSeq
-        if (kcols.size == 1) {
-          val keys = dk.limit(1025).collect().map(_.get(0))
-          if (keys.length <= 1024 && !keys.contains(null))
-            c.filter(col(kcols.head).isin(keys.toIndexedSeq: _*))
-          else applyDel(c, Some(dk), anti = false)
-        } else applyDel(c, Some(dk), anti = false)
-      }
-    }
-    // carried-file preimages newly POSITION-deleted: addressed by
-    // (file, ordinal) — visible at fromV unless already deleted there
+    // small single-column delete sets become a literal In
+    // ([[applyKeyDeletes]]); composite keys (and a pathological
+    // backlog) pay the semi-join scan of the carried files' key
+    // columns only. Newly POSITION-deleted preimages are addressed by
+    // (file, ordinal) — visible at fromV unless already deleted there.
+    val carriedKeyDeleted = newDel.flatMap(dk =>
+      scan(carried, Sidecars(fromPos, keys = Some(dk), keepKeys = true)))
     val carriedPosDeleted =
-      if (newPos.isEmpty) None
-      else rd(carried).map(c0 => projected(keepPosDeleted(spark, c0, newPos)))
-    val sides = (
-      rd(removed).map(r => applyDel(projected(applyPosDeletes(spark, r, fromPos)),
-        fromDel, anti = true)),
-      rd(added).map(r => applyDel(projected(applyPosDeletes(spark, r, toPos)),
-        toDel, anti = true)))
+      if (newPos.isEmpty) None else scan(carried, Sidecars(newPos, keepPos = true))
+    val sides = (scan(removed, Sidecars(fromPos, keys = fromDel)),
+      scan(added, Sidecars(toPos, keys = toDel)))
     val carriedPieces = carriedKeyDeleted.toSeq ++ carriedPosDeleted.toSeq
     val pieces = Seq(sides._1, sides._2).flatten ++ carriedPieces
     if (pieces.isEmpty || (sides._1.isEmpty && sides._2.isEmpty &&
@@ -3453,7 +3382,7 @@ object CowTable {
     if (Files.exists(bp)) CowCatalog.deleteTree(bp)
   }
 
-  // input_file_name() returns a file URI; manifests store plain paths
+  // `_metadata.file_path` is a file URI; manifests store plain paths
   private def samePath(manifest: String, uri: String): Boolean =
     uri.stripPrefix("file:").stripPrefix("//") == manifest ||
       uri.endsWith(manifest) || manifest.endsWith(uri.stripPrefix("file:"))

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -49,6 +49,32 @@ object Sinks {
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(table)
 
+  /** The streaming query behind every stream wrapper here: `body` runs
+    * per micro-batch (with its batch id) under foreachBatch,
+    * checkpointed at `checkpoint`, in the default append output mode.
+    */
+  private def perBatch(stream: DataFrame, checkpoint: String)
+                      (body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream.option("checkpointLocation", checkpoint).foreachBatch(body).start()
+
+  /** The rows stored under the parquet directory `path`, if it exists. */
+  private def stored(spark: SparkSession, path: String): Option[DataFrame] =
+    Option.when(new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(new Path(path)))(spark.read.parquet(path))
+
+  /** Replace the parquet directory `path` with `df`: write it to
+    * `stage`, delete `path`, rename `stage` into place — the
+    * bounded-scale rewrite the parquet upsert sinks and
+    * [[compactParquet]] share.
+    */
+  private def stageAndSwap(df: DataFrame, path: String, stage: String): Unit = {
+    val fs = new Path(path).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    df.write.mode(SaveMode.Overwrite).parquet(stage)
+    fs.delete(new Path(path), true)
+    fs.rename(new Path(stage), new Path(path))
+    ()
+  }
+
   /** foreachBatch fan-out: ONE streaming query feeding two sinks — the
     * raw event log (append) and a per-type running aggregate rollup —
     * without running (and state-keeping) the pipeline twice. The
@@ -60,12 +86,9 @@ object Sinks {
     */
   def fanoutParquet(stream: DataFrame, rawPath: String, aggPath: String,
                     checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        fanoutBatch(batch, id, rawPath, aggPath)
-      }
-      .start()
+    perBatch(stream, checkpoint) { (batch, id) =>
+      fanoutBatch(batch, id, rawPath, aggPath)
+    }
 
   /** Per-micro-batch body of [[fanoutParquet]] (replay-contract
     * testable: a second call with the same (batch, id) must leave both
@@ -98,13 +121,9 @@ object Sinks {
     */
   def reconCdcPipeline(outcomes: DataFrame, tablePath: String,
                        checkpoint: String): StreamingQuery =
-    outcomes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        reconCdcBatch(batch, tablePath)
-      }
-      .start()
+    perBatch(outcomes, checkpoint) { (batch, _) =>
+      reconCdcBatch(batch, tablePath)
+    }
 
   /** Per-micro-batch body of [[reconCdcPipeline]] (replay-contract
     * testable: re-merging the same keyed rows is content-idempotent).
@@ -155,13 +174,9 @@ object Sinks {
                                indexPath: String, pairsOut: String,
                                blockCols: Seq[String],
                                checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        incrementalDedupBatch(batch, id, corpusPath, indexPath, pairsOut, blockCols)
-      }
-      .start()
+    perBatch(docs, checkpoint) { (batch, id) =>
+      incrementalDedupBatch(batch, id, corpusPath, indexPath, pairsOut, blockCols)
+    }
 
   /** LIVE ANN-INDEX MAINTENANCE (round 13): the streaming face of
     * [[graft.ops.IvfIndex]] — each micro-batch of vector upserts lands
@@ -187,14 +202,10 @@ object Sinks {
                       maxDrift: Double = 0.2,
                       appId: String = "ivf-ingest",
                       sq8: Boolean = false): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ivfIngestBatch(batch, id, corpusPath, indexPath,
-          numCells, iters, maxDrift, appId, sq8)
-      }
-      .start()
+    perBatch(vectors, checkpoint) { (batch, id) =>
+      ivfIngestBatch(batch, id, corpusPath, indexPath,
+        numCells, iters, maxDrift, appId, sq8)
+    }
 
   /** The per-micro-batch body of [[ivfIngestStream]], exposed so the
     * replay contract is testable without streaming machinery.
@@ -242,13 +253,9 @@ object Sinks {
   def cdcMirrorStream(feed: DataFrame, path: String, key: String,
                       checkpoint: String,
                       appId: String = "cdc-mirror"): StreamingQuery =
-    feed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        cdcMirrorBatch(batch, path, key, appId)
-      }
-      .start()
+    perBatch(feed, checkpoint) { (batch, _) =>
+      cdcMirrorBatch(batch, path, key, appId)
+    }
 
   /** The per-micro-batch body of [[cdcMirrorStream]], exposed so the
     * replay contract is testable without streaming machinery.
@@ -342,13 +349,9 @@ object Sinks {
     */
   def gdprDeleteStream(requests: DataFrame, tablePath: String, key: String,
                        checkpoint: String): StreamingQuery =
-    requests.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        gdprDeleteBatch(batch, tablePath, key)
-      }
-      .start()
+    perBatch(requests, checkpoint) { (batch, _) =>
+      gdprDeleteBatch(batch, tablePath, key)
+    }
 
   /** Per-micro-batch body of [[gdprDeleteStream]] (replay-contract
     * testable: re-deleting non-live keys commits nothing).
@@ -380,13 +383,9 @@ object Sinks {
     */
   def appendStream(stream: DataFrame, tablePath: String, checkpoint: String,
                    appId: String = "append-stream"): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendBatch(batch, id, tablePath, appId)
-      }
-      .start()
+    perBatch(stream, checkpoint) { (batch, id) =>
+      appendBatch(batch, id, tablePath, appId)
+    }
 
   /** Per-micro-batch body of [[appendStream]], exposed so the replay
     * contract is testable without streaming machinery: calling it
@@ -417,13 +416,9 @@ object Sinks {
   def enrichAppendStream(stream: DataFrame, dimPath: String, key: String,
                          outPath: String, checkpoint: String,
                          appId: String = "enrich-stream"): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        enrichAppendBatch(batch, id, dimPath, key, outPath, appId)
-      }
-      .start()
+    perBatch(stream, checkpoint) { (batch, id) =>
+      enrichAppendBatch(batch, id, dimPath, key, outPath, appId)
+    }
 
   /** Per-micro-batch body of [[enrichAppendStream]] (replay-contract
     * testable: the inner transactional append makes a replay a no-op).
@@ -479,14 +474,10 @@ object Sinks {
                         checkpoint: String,
                         literalMax: Int = 1024,
                         versionCol: Option[String] = None): StreamingQuery =
-    dimUpdates.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        fkDimFanoutBatch(batch, dimPath, factPath, viewPath,
-          factKey, fkCol, dimKey, literalMax, versionCol)
-      }
-      .start()
+    perBatch(dimUpdates, checkpoint) { (batch, _) =>
+      fkDimFanoutBatch(batch, dimPath, factPath, viewPath,
+        factKey, fkCol, dimKey, literalMax, versionCol)
+    }
 
   /** The FK-join view both [[fkDimFanoutStream]] and its spec use:
     * fact ⟕ dim on `fkCol = dimKey`, fact columns ++ dim payload.
@@ -576,14 +567,6 @@ object Sinks {
         distinctRows
     }
 
-  /** Streaming upsert sink (`KTable` materialization): per micro-batch,
-    * merge the batch into a keyed parquet view keeping the latest row
-    * per key by `tsCol`. The merge here is read-union-dedup-rewrite via
-    * a staging directory — correct and idempotent for the bounded
-    * scales this repo runs at; a production deployment swaps the body
-    * for a transactional MERGE INTO (Delta/Iceberg) with the same
-    * (key, ts) semantics.
-    */
   /** Small-file compaction — the table-maintenance job every
     * streaming-ingested 100 TB table needs: micro-batches leave
     * thousands of KB-scale files whose per-file open/footer overhead
@@ -592,14 +575,8 @@ object Sinks {
     * upsert sinks). Rows are preserved exactly; only layout changes.
     */
   def compactParquet(spark: org.apache.spark.sql.SparkSession, path: String,
-                     targetFiles: Int): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = path + "__compact"
-    spark.read.parquet(path).repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).parquet(stage)
-    fs.delete(new Path(path), true)
-    fs.rename(new Path(stage), new Path(path))
-  }
+                     targetFiles: Int): Unit =
+    stageAndSwap(spark.read.parquet(path).repartition(targetFiles), path, path + "__compact")
 
   /** Morton (Z-order) interleave of two 32-bit keys — the
     * multi-dimensional clustering key: sorting by it keeps rows close
@@ -721,33 +698,23 @@ object Sinks {
     */
   def scd2Parquet(stream: DataFrame, path: String, checkpoint: String,
                   keyCol: String, tsCol: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        scd2Batch(batch, path, keyCol, tsCol)
-      }
-      .start()
+    perBatch(stream, checkpoint) { (batch, _) =>
+      scd2Batch(batch, path, keyCol, tsCol)
+    }
 
   /** Per-micro-batch body of [[scd2Parquet]] (replay-contract
     * testable: dropDuplicates on (key, valid_from) absorbs a replay).
     */
   private[graft] def scd2Batch(batch: DataFrame, path: String,
                                keyCol: String, tsCol: String): Unit = {
-    val spark = batch.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val incoming = batch.withColumnRenamed(tsCol, "valid_from")
-    val current =
-      if (fs.exists(new Path(path))) spark.read.parquet(path).drop("valid_to")
-      else incoming.limit(0)
+    val current = stored(batch.sparkSession, path).map(_.drop("valid_to"))
+      .getOrElse(incoming.limit(0))
     val w = Window.partitionBy(keyCol).orderBy("valid_from")
     val versions = current.unionByName(incoming)
       .dropDuplicates(keyCol, "valid_from")
       .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
-    val stage = path + "__stage"
-    versions.write.mode(SaveMode.Overwrite).parquet(stage)
-    fs.delete(new Path(path), true)
-    fs.rename(new Path(stage), new Path(path))
-    ()
+    stageAndSwap(versions, path, path + "__stage")
   }
 
   /** CDC-apply sink — [[upsertParquet]] with TOMBSTONES: each change
@@ -762,12 +729,9 @@ object Sinks {
     */
   def cdcApplyParquet(stream: DataFrame, path: String, checkpoint: String,
                       keyCol: String, tsCol: String, opCol: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        cdcApplyBatch(batch, path, keyCol, tsCol, opCol)
-      }
-      .start()
+    perBatch(stream, checkpoint) { (batch, _) =>
+      cdcApplyBatch(batch, path, keyCol, tsCol, opCol)
+    }
 
   /** Per-micro-batch body of [[cdcApplyParquet]] (replay-contract
     * testable: latest-change-per-key-wins absorbs a replay).
@@ -775,53 +739,43 @@ object Sinks {
   private[graft] def cdcApplyBatch(batch: DataFrame, path: String,
                                    keyCol: String, tsCol: String,
                                    opCol: String): Unit = {
-    val spark = batch.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // stored live rows re-enter the merge as upserts at their
     // original change time, so a NEWER tombstone in the batch
     // deletes them and an OLDER one (late replay) does not
-    val current =
-      if (fs.exists(new Path(path))) spark.read.parquet(path)
-      else batch.limit(0)
+    val current = stored(batch.sparkSession, path).getOrElse(batch.limit(0))
     val w = Window.partitionBy(keyCol).orderBy(col(tsCol).desc, col(keyCol))
     val merged = current.unionByName(batch)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1 && col(opCol) =!= "delete")
       .drop("__rn")
-    val stage = path + "__stage"
-    merged.write.mode(SaveMode.Overwrite).parquet(stage)
-    fs.delete(new Path(path), true)
-    fs.rename(new Path(stage), new Path(path))
-    ()
+    stageAndSwap(merged, path, path + "__stage")
   }
 
+  /** Streaming upsert sink (`KTable` materialization): per micro-batch,
+    * merge the batch into a keyed parquet view keeping the latest row
+    * per key by `tsCol`. The merge here is read-union-dedup-rewrite via
+    * a staging directory — correct and idempotent for the bounded
+    * scales this repo runs at; a production deployment swaps the body
+    * for a transactional MERGE INTO (Delta/Iceberg) with the same
+    * (key, ts) semantics.
+    */
   def upsertParquet(stream: DataFrame, path: String, checkpoint: String,
                     keyCol: String, tsCol: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        upsertBatch(batch, path, keyCol, tsCol)
-      }
-      .start()
+    perBatch(stream, checkpoint) { (batch, _) =>
+      upsertBatch(batch, path, keyCol, tsCol)
+    }
 
   /** Per-micro-batch body of [[upsertParquet]] (replay-contract
     * testable: latest-row-per-key-wins absorbs a replay).
     */
   private[graft] def upsertBatch(batch: DataFrame, path: String,
                                  keyCol: String, tsCol: String): Unit = {
-    val spark = batch.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val current =
-      if (fs.exists(new Path(path))) spark.read.parquet(path) else batch.limit(0)
+    val current = stored(batch.sparkSession, path).getOrElse(batch.limit(0))
     val w = Window.partitionBy(keyCol)
       .orderBy(col(tsCol).desc, col(keyCol))
     val merged = current.unionByName(batch)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val stage = path + "__stage"
-    merged.write.mode(SaveMode.Overwrite).parquet(stage)
-    fs.delete(new Path(path), true)
-    fs.rename(new Path(stage), new Path(path))
-    ()
+    stageAndSwap(merged, path, path + "__stage")
   }
 }
